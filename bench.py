@@ -178,8 +178,9 @@ def main() -> None:
             la = _loadavg1()
             if la is not None:
                 query_load[name] = la
-            still = (best > 2.0 * med) if med is not None else \
-                (la is not None and la > LOADAVG_QUIET)
+            # same tiny-median noise exemption as the first pass
+            still = (best > 2.0 * med) if med is not None and med >= 0.15 \
+                else (la is not None and la > LOADAVG_QUIET)
             adjudications.append({
                 "query": name,
                 "reason": flagged[name],

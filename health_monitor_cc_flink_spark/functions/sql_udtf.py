@@ -12,10 +12,12 @@ These UDTFs expose the engine's ML functions to pure SQL:
                                       PARTITION BY patient_id
                                       ORDER BY event_timestamp)
 
-The math is the same expanding AR(1) as functions/timeseries.py,
-maintained incrementally in O(1) per row (running sums) — identical
-left-to-right accumulation order, so outputs agree bit-for-bit with the
-vectorized batch operator (pinned by tests/test_sql_pipeline.py).
+Both score through the one AR(1) kernel and its row builders
+(functions/timeseries.py), so their outputs equal the DataFrame
+operators' on the same rows (pinned by tests/test_sql_pipeline.py).
+Each buffers its partition and scores it in ``terminate()``: the
+forecast timestamps need the key's final inter-arrival gap, and scoring
+the whole key in one vectorized pass costs less than row by row.
 Column names are fixed to the pipeline schema (patient_id,
 event_timestamp, observed_value); the DataFrame operators remain the
 configurable fast path.
@@ -23,81 +25,27 @@ configurable fast path.
 
 from __future__ import annotations
 
-import math
-from statistics import NormalDist
+import datetime
 
-import numpy as np
 from pyspark.sql.functions import udtf
 
-_N_PARAMS = 2
+from .timeseries import _zcrit, anomaly_report, forecast_steps
 
 
-class _OnlineAR1:
-    """Incremental expanding AR(1)-with-drift: O(1) update via running
-    sums; same closed forms as functions.timeseries.expanding_ar1."""
+class _KeyBuffer:
+    """Rows of one PARTITION BY key, in the ORDER BY order they arrive,
+    plus the SQL arguments (constant per call; SQL literals arrive as
+    Decimal)."""
 
     def __init__(self):
-        self.n = 0
-        self.s1 = 0.0   # Σ y over the full prefix
-        self.s2 = 0.0   # Σ y² over the full prefix
-        self.s1_prev = 0.0  # Σ y over the prefix MINUS its last row
-        self.s2_prev = 0.0  # Σ y² over the prefix minus its last row
-        self.c = 0.0    # Σ y_{t-1}·y_t
-        self.y_first = 0.0
-        self.y_last = 0.0
+        self.pid, self.ts, self.y = None, [], []
+        self.args = None
 
-    def update(self, y: float) -> None:
-        if self.n == 0:
-            self.y_first = y
-        else:
-            self.c += self.y_last * y
-        self.n += 1
-        # Σx (regressors = all values before the prefix's last row) must be
-        # the SNAPSHOT of the running sum before this add, not `s1 - y_last`
-        # recomputed later: float subtraction is not the inverse of addition
-        # (fl((s+y)-y) != s in general), and the batch kernel takes the
-        # prefix cumsum directly — same trap _ar1_fit_native documents.
-        self.s1_prev = self.s1
-        self.s2_prev = self.s2
-        self.s1 += y
-        self.s2 += y * y
-        self.y_last = y
-
-    def fit(self):
-        """Return (a, b, sigma, rmse, aic) of the fit on the current
-        prefix, or None while the prefix is too short."""
-        m, k = self.n, self.n - 1.0
-        if m < 2:
-            return None
-        sum_x = self.s1_prev
-        sum_z = self.s1 - self.y_first
-        sum_x2 = self.s2_prev
-        sum_z2 = self.s2 - self.y_first * self.y_first
-        if k < 2:
-            return (self.y_first, 0.0, float("inf"), float("nan"), float("nan"))
-        denom = k * sum_x2 - sum_x * sum_x
-        b = (k * self.c - sum_x * sum_z) / denom if abs(denom) > 1e-12 else 0.0
-        a = (sum_z - b * sum_x) / k
-        sse = max(
-            sum_z2
-            + k * a * a
-            + b * b * sum_x2
-            - 2.0 * a * sum_z
-            - 2.0 * b * self.c
-            + 2.0 * a * b * sum_x,
-            0.0,
-        )
-        sigma = max(math.sqrt(sse / max(k - _N_PARAMS, 1.0)), 1e-9)
-        rmse = math.sqrt(sse / k)
-        # np.log, not math.log: they are different libm paths that can differ
-        # in the last ulp, and the bit-parity contract with expanding_ar1
-        # covers aic too (sqrt is correctly rounded everywhere, log is not)
-        aic = (
-            k * float(np.log(sse / k)) + 2.0 * (_N_PARAMS + 1)
-            if sse > 0
-            else float("nan")
-        )
-        return (a, b, sigma, rmse, aic)
+    def add(self, row, *args) -> None:
+        self.pid = row["patient_id"]
+        self.ts.append(row["event_timestamp"])
+        self.y.append(float(row["observed_value"]))
+        self.args = args
 
 
 @udtf(
@@ -111,43 +59,20 @@ class MLDetectAnomalies:
     event_timestamp [, min_training_size, confidence_percentage])."""
 
     def __init__(self):
-        self.model = _OnlineAR1()
-        self.i = 0
-        self._z = None
-        self._z_for = None
-
-    def _zcrit(self, confidence_percentage) -> float:
-        # confidence is constant per partition: solve inv_cdf once, not
-        # per row (it's an iterative solver on the UDTF hot path)
-        if self._z_for != confidence_percentage:
-            self._z = NormalDist().inv_cdf(0.5 + float(confidence_percentage) / 200.0)
-            self._z_for = confidence_percentage
-        return self._z
+        self.key = _KeyBuffer()
 
     def eval(self, row, min_training_size: int = 30, confidence_percentage: float = 95.0):
-        min_training_size = int(min_training_size)  # SQL literals arrive as Decimal
-        z = self._zcrit(confidence_percentage)
-        y = float(row["observed_value"])
-        fit = self.model.fit()  # model over rows 1..i-1
-        if fit is None or not math.isfinite(fit[2]):
-            expected = lower = upper = None
-            is_anom = False
-        else:
-            a, b, sigma, _, _ = fit
-            expected = a + b * self.model.y_last
-            lower, upper = expected - z * sigma, expected + z * sigma
-            is_anom = self.i >= min_training_size and (y < lower or y > upper)
-        self.model.update(y)
-        self.i += 1
-        yield (
-            row["patient_id"],
-            row["event_timestamp"],
-            y,
-            bool(is_anom),
-            expected,
-            lower,
-            upper,
+        self.key.add(row, min_training_size, confidence_percentage)
+
+    def terminate(self):
+        if not self.key.y:
+            return
+        min_training_size, confidence_percentage = self.key.args
+        report, _ = anomaly_report(
+            self.key.y, _zcrit(float(confidence_percentage)), int(min_training_size)
         )
+        for ts, y, is_anom, expected, lower, upper in zip(self.key.ts, self.key.y, *report):
+            yield (self.key.pid, ts, y, bool(is_anom), expected, lower, upper)
 
 
 @udtf(
@@ -161,20 +86,11 @@ class MLForecast:
     """ML_FORECAST(TABLE(t) PARTITION BY patient_id ORDER BY
     event_timestamp [, horizon, confidence_percentage, min_training_size]).
 
-    The batch operator stamps EVERY row's forecast_timestamp with the
-    key's FINAL inter-arrival gap (``steps.iloc[-1]``, ≤0/missing → 1 s),
-    which is only known once the partition ends — so rows are buffered
-    and emitted from ``terminate()``.  (A prior version used the running
-    last gap, silently diverging from the batch operator on keys with
-    varying cadence.)"""
+    Like the batch operator, every row's forecast_timestamp steps by the
+    key's FINAL inter-arrival gap (≤0/missing → 1 s)."""
 
     def __init__(self):
-        self.model = _OnlineAR1()
-        self.prev_ts = None
-        self.last_diff = None  # diff of the final two timestamps seen
-        self.rows = []  # buffered outputs awaiting the partition-final gap
-        self._z = None
-        self._z_for = None
+        self.key = _KeyBuffer()
 
     def eval(
         self,
@@ -183,51 +99,25 @@ class MLForecast:
         confidence_percentage: float = 95.0,
         min_training_size: int = 2,
     ):
-        horizon = int(horizon)  # SQL literals arrive as Decimal
-        min_training_size = int(min_training_size)
-        if self._z_for != confidence_percentage:
-            self._z = NormalDist().inv_cdf(0.5 + float(confidence_percentage) / 200.0)
-            self._z_for = confidence_percentage
-        z = self._z
-        ts = row["event_timestamp"]
-        y = float(row["observed_value"])
-        if self.prev_ts is not None:
-            self.last_diff = ts - self.prev_ts
-        self.prev_ts = ts
-        self.model.update(y)
-        fit = self.model.fit()
-        if self.model.n < min_training_size or fit is None or not math.isfinite(fit[2]):
-            return
-        a, b, sigma, rmse, aic = fit
-        yhat, var_acc = y, 0.0
-        b2, pw = b * b, 1.0  # product chain, not pow (ulp parity with batch)
-        for h in range(1, horizon + 1):
-            yhat = a + b * yhat
-            var_acc += pw
-            pw = pw * b2
-            band = z * sigma * math.sqrt(var_acc)
-            self.rows.append(
-                (
-                    row["patient_id"],
-                    ts,
-                    y,
-                    h,
-                    yhat,
-                    yhat - band,
-                    yhat + band,
-                    rmse if math.isfinite(rmse) else None,
-                    aic if math.isfinite(aic) else None,
-                )
-            )
+        self.key.add(row, horizon, confidence_percentage, min_training_size)
 
     def terminate(self):
-        import datetime
-
-        step = self.last_diff
+        if not self.key.y:
+            return
+        horizon, confidence_percentage, min_training_size = self.key.args
+        ts = self.key.ts
+        step = ts[-1] - ts[-2] if len(ts) >= 2 else None
         if step is None or step <= datetime.timedelta(0):
             step = datetime.timedelta(seconds=1)
-        for pid, ts, y, h, yhat, lo, hi, rmse, aic in self.rows:
-            yield (pid, ts, y, ts + h * step, yhat, lo, hi, rmse, aic)
+        steps, _ = forecast_steps(
+            self.key.y,
+            _zcrit(float(confidence_percentage)),
+            int(horizon),
+            int(min_training_size),
+        )
+        for t, y, per_point in zip(ts, self.key.y, steps):
+            for h, v, lo, hi, rmse, aic in per_point:
+                yield (self.key.pid, t, y, t + h * step, v, lo, hi, rmse, aic)
 
 
 def register_sql_ml_functions(spark) -> None:

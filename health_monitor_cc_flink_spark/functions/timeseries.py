@@ -16,28 +16,41 @@ Model: expanding-window AR(1) with drift, y_t = a + b·y_{t-1} + ε.
 For every prefix of a key's ordered history the OLS coefficients,
 residual variance, RMSE and AIC are all computable from running sums, so
 the whole per-key pass is **O(n) and fully vectorized** — no per-row
-refitting.  This matters at scale: the cost per key is one NumPy sweep
-over its history, and keys are processed in parallel via
-``groupBy(key).applyInPandas`` (Arrow-batched, one shuffle on the key —
-the same shuffle the OVER frame implies in any engine).
+refitting.
 
-Execution shape (batch):
-    df.groupBy(key).applyInPandas(fn)  →  shuffle by key, sort in-group
-Streaming uses the same kernel inside ``transformWithStateInPandas``
-(see streaming/stateful.py).
+Two implementations, bit-identical (tests/test_timeseries.py):
+
+- the native window path (`_ar1_fit_native`, the default for batch):
+  the running sums as ``SUM ... OVER`` window aggregates, all codegen;
+- `expanding_ar1`, the one Python kernel.  It continues from a carried
+  `AR1State` (n, Σy, Σy², Σy·y_lag, y₀, y_last and the last fit), so a
+  history fed in pieces gives the same bits as one pass.  Every Python
+  path scores through it and its two row builders, `anomaly_report` and
+  `forecast_steps`: ``implementation="pandas"`` here (the reference the
+  tests compare against), the streaming operators in
+  streaming/stateful.py (the state is an `AR1State` per key, O(1)
+  whatever the history length) and the SQL table functions in
+  functions/sql_udtf.py.
 """
 
 from __future__ import annotations
 
 import math
 from statistics import NormalDist
-from typing import Sequence
+from typing import NamedTuple, Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
-__all__ = ["ml_detect_anomalies", "ml_forecast", "expanding_ar1"]
+__all__ = [
+    "ml_detect_anomalies",
+    "ml_forecast",
+    "expanding_ar1",
+    "AR1State",
+    "anomaly_report",
+    "forecast_steps",
+]
 
 _INF = float("inf")
 _NAN = float("nan")
@@ -51,35 +64,65 @@ def _zcrit(confidence_percentage: float) -> float:
     return NormalDist().inv_cdf(p)
 
 
-def expanding_ar1(y: np.ndarray):
-    """Expanding-window AR(1)-with-drift fit over every prefix of ``y``.
+class AR1State(NamedTuple):
+    """What `expanding_ar1` carries from one call to the next for a key:
+    the running sums after the key's last point, and the fit on all of
+    its points.  O(1) per key whatever the history length."""
 
-    For each m in [1, n] the model is fit on pairs
-    (y_1..y_{m-1} → y_2..y_m), i.e. on the full prefix ending at m.
-    Returns dict of arrays (len n): a, b, sigma (residual std with df
-    correction), rmse, aic — entry m-1 describes the fit on prefix m.
-    All O(n) via cumulative sums.
+    n: int          # points seen
+    s1: float       # Σ y
+    s2: float       # Σ y²
+    c: float        # Σ y_{t-1}·y_t
+    y0: float       # first point
+    y_last: float   # last point
+    a: float        # fit on all n points
+    b: float
+    sigma: float
+
+
+def _fresh_state(y0: float) -> AR1State:
+    """The state before a key's first point: no sums, and the fit that
+    scores nothing (sigma = inf)."""
+    return AR1State(0, 0.0, 0.0, 0.0, y0, y0, 0.0, 0.0, _INF)
+
+
+def expanding_ar1(y: np.ndarray, state: AR1State | None = None):
+    """Expanding-window AR(1)-with-drift fit over every prefix of a key's
+    history, continuing from ``state`` (the key's earlier points; None
+    when ``y`` starts the key).
+
+    For each new point the model is fit on the pairs (y_1..y_{m-1} →
+    y_2..y_m) of the whole prefix ending there.  Returns ``(fits,
+    state)``: a dict of arrays (len(y)) a, b, sigma (residual std with df
+    correction), rmse, aic — entry i describes the fit on the prefix
+    ending at y[i] — and the state after the last point.  All O(len(y))
+    via cumulative sums.  The sums continue sequentially from the carried
+    ones, so any split of a history gives the same bits as one call.
     """
+    y = np.asarray(y, dtype=np.float64)
     n = len(y)
-    a = np.zeros(n)
-    b = np.zeros(n)
-    sigma = np.full(n, np.inf)
-    rmse = np.full(n, np.nan)
-    aic = np.full(n, np.nan)
-    if n < 2:
-        return {"a": a, "b": b, "sigma": sigma, "rmse": rmse, "aic": aic}
+    if n == 0:
+        empty = np.zeros(0)
+        return {f: empty for f in ("a", "b", "sigma", "rmse", "aic")}, state
+    st = state or _fresh_state(float(y[0]))
+    lag = y * np.concatenate([[st.y_last], y[:-1]])
+    if st.n == 0:
+        lag[0] = 0.0                        # the first point has no predecessor
+    s1 = np.cumsum(np.concatenate([[st.s1], y]))        # Σ y   over t ≤ m
+    s2 = np.cumsum(np.concatenate([[st.s2], y * y]))    # Σ y²
+    c = np.cumsum(np.concatenate([[st.c], lag]))[1:]    # Σ y_{t-1}·y_t, t ≤ m
+    y0 = st.y0
 
-    s1 = np.cumsum(y)                       # Σ y_t           over t ≤ m
-    s2 = np.cumsum(y * y)                   # Σ y_t²
-    c = np.concatenate([[0.0], np.cumsum(y[1:] * y[:-1])])  # Σ y_{t-1}·y_t, t ≤ m
-
-    m = np.arange(1, n + 1, dtype=np.float64)
+    m = np.arange(st.n + 1, st.n + n + 1, dtype=np.float64)
     k = m - 1.0                             # number of regression pairs
     with np.errstate(divide="ignore", invalid="ignore"):
-        sum_x = np.concatenate([[0.0], s1[:-1]])        # Σ x over prefix
-        sum_z = s1 - y[0]                               # Σ z
-        sum_x2 = np.concatenate([[0.0], s2[:-1]])
-        sum_z2 = s2 - y[0] * y[0]
+        # Σx (regressors = all values before the current one) is the
+        # running sum one step earlier, never `s1 - y`: float subtraction
+        # does not undo addition, and the native path takes it the same way
+        sum_x, s1 = s1[:-1], s1[1:]
+        sum_x2, s2 = s2[:-1], s2[1:]
+        sum_z = s1 - y0                                 # Σ z
+        sum_z2 = s2 - y0 * y0
         denom = k * sum_x2 - sum_x * sum_x
         b_hat = np.where(np.abs(denom) > 1e-12, (k * c - sum_x * sum_z) / np.where(denom == 0, 1, denom), 0.0)
         a_hat = np.where(k > 0, (sum_z - b_hat * sum_x) / np.where(k == 0, 1, k), 0.0)
@@ -103,6 +146,11 @@ def expanding_ar1(y: np.ndarray):
                 + 2.0 * (_N_PARAMS + 1),
                 np.nan,
             )
+    a = np.zeros(n)
+    b = np.zeros(n)
+    sigma = np.full(n, np.inf)
+    rmse = np.full(n, np.nan)
+    aic = np.full(n, np.nan)
     valid = k >= 2                                       # need ≥2 pairs for a line
     a[valid] = a_hat[valid]
     b[valid] = b_hat[valid]
@@ -110,9 +158,82 @@ def expanding_ar1(y: np.ndarray):
     rmse[valid] = rm[valid]
     aic[valid] = ai[valid]
     # single-pair prefix: fall back to mean ("persistence") prediction
-    one = k == 1
-    a[one] = y[0]
-    return {"a": a, "b": b, "sigma": sigma, "rmse": rmse, "aic": aic}
+    a[k == 1] = y0
+    fits = {"a": a, "b": b, "sigma": sigma, "rmse": rmse, "aic": aic}
+    end = AR1State(
+        st.n + n, float(s1[-1]), float(s2[-1]), float(c[-1]), y0, float(y[-1]),
+        float(a[-1]), float(b[-1]), float(sigma[-1]),
+    )
+    return fits, end
+
+
+def _finite_or_none(v: float):
+    return v if math.isfinite(v) else None
+
+
+def anomaly_report(y, z: float, min_training_size: int, state: AR1State | None = None):
+    """ML_DETECT_ANOMALIES report fields for the next points ``y`` of one
+    key, in event-time order: each point is scored by the fit on every
+    earlier point of the key (``state`` holds those before ``y``).
+
+    Returns ``((is_anomaly, expected_value, lower_bound, upper_bound),
+    state)``.  ``is_anomaly`` is a bool array; the other three are lists
+    with None where the report is NULL, i.e. while the scoring fit has no
+    finite sigma.  The first ``min_training_size`` points of a key are
+    never flagged.
+    """
+    y = np.asarray(y, dtype=np.float64)
+    fits, end = expanding_ar1(y, state)
+    n = len(y)
+    prev = state or _fresh_state(float(y[0]) if n else 0.0)
+    a = np.concatenate([[prev.a], fits["a"]])[:n]
+    b = np.concatenate([[prev.b], fits["b"]])[:n]
+    s = np.concatenate([[prev.sigma], fits["sigma"]])[:n]
+    expected = a + b * np.concatenate([[prev.y_last], y])[:n]
+    lower = expected - z * s
+    upper = expected + z * s
+    finite = np.isfinite(s)
+    trained = np.arange(prev.n, prev.n + n) >= min_training_size
+    is_anom = trained & finite & ((y < lower) | (y > upper))
+
+    def masked(v):
+        return [_finite_or_none(x) if f else None for x, f in zip(v.tolist(), finite.tolist())]
+
+    return (is_anom, masked(expected), masked(lower), masked(upper)), end
+
+
+def forecast_steps(y, z: float, horizon: int, min_training_size: int, state: AR1State | None = None):
+    """ML_FORECAST values for the next points ``y`` of one key: for each
+    point, from the fit on the key's history up to and including it,
+    ``[(h, forecast_value, lower_bound, upper_bound, rmse, aic)]`` for h in
+    1..horizon — or ``[]`` while the key has fewer than
+    ``min_training_size`` points or the fit no finite sigma.  rmse/aic are
+    None where not finite.  Returns ``(steps per point, state)``.
+
+    Multi-step intervals widen with the AR(1) variance recursion
+    Var_h = σ²·Σ_{j<h} b^{2j}, b^{2j} by a product chain rather than pow
+    (multiplication rounds the same on the JVM and in C, pow may not).
+    """
+    y = np.asarray(y, dtype=np.float64)
+    fits, end = expanding_ar1(y, state)
+    n0 = state.n if state else 0
+    cols = (fits[f].tolist() for f in ("a", "b", "sigma", "rmse", "aic"))
+    out = []
+    for i, (yhat, a, b, s, rm, ai) in enumerate(zip(y.tolist(), *cols)):
+        if n0 + i + 1 < min_training_size or not math.isfinite(s):
+            out.append([])
+            continue
+        rm, ai = _finite_or_none(rm), _finite_or_none(ai)
+        var_acc, b2, pw = 0.0, b * b, 1.0
+        steps = []
+        for h in range(1, horizon + 1):
+            yhat = a + b * yhat
+            var_acc += pw
+            pw = pw * b2
+            band = z * s * math.sqrt(var_acc)
+            steps.append((h, yhat, yhat - band, yhat + band, rm, ai))
+        out.append(steps)
+    return out, end
 
 
 def _sorted_group(pdf, ts_col: str, value_col: str):
@@ -292,30 +413,16 @@ def ml_detect_anomalies(
         return fitted.select(*df.columns, report.alias(output_col))
 
     def score(pdf):
-        import pandas as pd
-
         pdf, y = _sorted_group(pdf, ts_col, value_col)
-        n = len(y)
-        fits = expanding_ar1(y)
-        # model through row i-1 predicts row i → shift fit arrays by one
-        prev = np.maximum(np.arange(n) - 1, 0)
-        a, b, s = fits["a"][prev], fits["b"][prev], fits["sigma"][prev]
-        y_prev = np.concatenate([[y[0] if n else 0.0], y[:-1]])
-        expected = a + b * y_prev
-        lower = expected - z * s
-        upper = expected + z * s
-        trained = np.arange(n) >= min_training_size
-        finite = np.isfinite(s)
-        is_anom = trained & finite & ((y < lower) | (y > upper))
-        expected = np.where(finite, expected, np.nan)
+        (is_anom, expected, lower, upper), _ = anomaly_report(y, z, min_training_size)
         pdf[output_col] = [
             {
-                "is_anomaly": bool(is_anom[i]),
-                "expected_value": float(expected[i]) if np.isfinite(expected[i]) else None,
-                "lower_bound": float(lower[i]) if np.isfinite(lower[i]) else None,
-                "upper_bound": float(upper[i]) if np.isfinite(upper[i]) else None,
+                "is_anomaly": bool(f),
+                "expected_value": e,
+                "lower_bound": lo,
+                "upper_bound": hi,
             }
-            for i in range(n)
+            for f, e, lo, hi in zip(is_anom, expected, lower, upper)
         ]
         return pdf
 
@@ -414,42 +521,26 @@ def ml_forecast(
         import pandas as pd
 
         pdf, y = _sorted_group(pdf, ts_col, value_col)
-        n = len(y)
-        fits = expanding_ar1(y)
         ts = pd.to_datetime(pdf[ts_col])
         steps = ts.diff().dropna()
         step = steps.iloc[-1] if len(steps) else pd.Timedelta(seconds=1)
         if step <= pd.Timedelta(0):
             step = pd.Timedelta(seconds=1)
-
-        col = []
-        for i in range(n):
-            if i + 1 < min_training_size or not np.isfinite(fits["sigma"][i]):
-                col.append([])
-                continue
-            a, b, s = fits["a"][i], fits["b"][i], fits["sigma"][i]
-            rm, ai = float(fits["rmse"][i]), float(fits["aic"][i])
-            yhat = y[i]
-            var_acc = 0.0
-            b2, pw = float(b) * float(b), 1.0  # product chain, not pow (ulp parity with native)
-            out = []
-            for h in range(1, horizon + 1):
-                yhat = a + b * yhat
-                var_acc += pw
-                pw = pw * b2
-                band = z * s * math.sqrt(var_acc)
-                out.append(
-                    {
-                        "forecast_timestamp": (ts.iloc[i] + h * step).to_pydatetime(),
-                        "forecast_value": float(yhat),
-                        "lower_bound": float(yhat - band),
-                        "upper_bound": float(yhat + band),
-                        "rmse": rm if math.isfinite(rm) else None,
-                        "aic": ai if math.isfinite(ai) else None,
-                    }
-                )
-            col.append(out)
-        pdf[output_col] = col
+        rows, _ = forecast_steps(y, z, horizon, min_training_size)
+        pdf[output_col] = [
+            [
+                {
+                    "forecast_timestamp": (t + h * step).to_pydatetime(),
+                    "forecast_value": v,
+                    "lower_bound": lo,
+                    "upper_bound": hi,
+                    "rmse": rm,
+                    "aic": ai,
+                }
+                for h, v, lo, hi, rm, ai in per_point
+            ]
+            for t, per_point in zip(ts, rows)
+        ]
         return pdf
 
     return df.groupBy(*key_cols).applyInPandas(forecast, schema=out_schema)

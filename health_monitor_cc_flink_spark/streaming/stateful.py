@@ -2,25 +2,25 @@
 (SURVEY.md O31): per-key model state across micro-batches via
 ``applyInPandasWithState``.
 
-State per key = a bounded ring buffer of the most recent
-``max_history`` (ts, value) points.  The literal reference frame is
-UNBOUNDED PRECEDING; an unbounded buffer is a state-size trap at scale
-(SURVEY.md §7.3), so the buffer is capped — ≥ min_training_size and
-large enough that AR(1) coefficients are statistically indistinguishable
-from the full-history fit.  The deviation is documented engine behavior.
+State per key = the AR(1) kernel's running sums (`AR1State`: n, Σy, Σy²,
+Σy·y_lag, y₀, y_last, the last fit) plus the last timestamp — ten
+scalars, O(1) per key whatever the history length.  The reference frame
+is UNBOUNDED PRECEDING; carrying the sums keeps all of it, and
+`expanding_ar1` continues them in the same order one pass over the whole
+history would, so for event-time-ordered input the streaming output
+equals the batch operators' exactly for any micro-batch split.
 
-Ordering: rows are scored in event-time order *within* the
-concatenation of (buffered history, this batch).  Rows BELOW the
-watermark are dropped (the standard late-data contract; appending them
-would interleave the AR history out of event order).  In-watermark
-cross-batch disorder is scored against the available history
-(micro-batch approximation; the batch operator is the semantics
-reference).
+Ordering: each micro-batch is scored in event-time order after the
+key's earlier points.  Rows BELOW the watermark are dropped (the
+standard late-data contract; the sums cannot take a point out of event
+order).  In-watermark cross-batch disorder is scored in arrival order
+of the batches (micro-batch approximation; the batch operator is the
+semantics reference).
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Sequence
+from typing import Any, Iterator
 
 import numpy as np
 from pyspark.errors import PySparkRuntimeError
@@ -28,35 +28,35 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..functions.timeseries import _zcrit, expanding_ar1
+from ..functions.timeseries import AR1State, _zcrit, anomaly_report, forecast_steps
 
-MAX_HISTORY_DEFAULT = 512
-
-#: (ts_us, vals) ring-buffer state shared by the two AR(1) scorers
-_TS_VALS_STATE_SCHEMA = T.StructType(
+#: per-key state of the two AR(1) scorers: an AR1State, then the key's
+#: last timestamp (µs)
+_AR1_STATE_SCHEMA = T.StructType(
     [
-        T.StructField("ts_us", T.ArrayType(T.LongType())),
-        T.StructField("vals", T.ArrayType(T.DoubleType())),
+        T.StructField(f, T.LongType() if f == "n" else T.DoubleType())
+        for f in AR1State._fields
     ]
+    + [T.StructField("ts_us", T.LongType())]
 )
 
 
-def _load_ring_buffer(state: GroupState) -> tuple[list, list]:
+def _load_ar1_state(state: GroupState) -> tuple[AR1State | None, int | None]:
     if state.exists:
-        hist_ts, hist_vals = state.get
-        return list(hist_ts), list(hist_vals)
-    return [], []
+        *sums, ts_us = state.get
+        return AR1State(*sums), ts_us
+    return None, None
 
 
-def _screen_batch(pdfs, state, ts_col, value_col, hist_ts, hist_vals, max_history):
+def _screen_batch(pdfs, state, ts_col, value_col):
     """The shared late-data contract for the AR(1) scorers: rows below the
-    watermark are dropped, not scored — appending them would interleave
-    the AR history out of event order.  Watermark-free streams (valid for
+    watermark are dropped, not scored — the running sums cannot take a
+    point out of event order.  Watermark-free streams (valid for
     NoTimeout operators) have no watermark to read: PySpark raises
     PySparkRuntimeError from a local-field check (no JVM call), which
     here means "keep all".  Only that error is caught — anything else
     should surface.  Returns the (ts, value)-sorted surviving batch, or
-    None after refreshing state when nothing survives."""
+    None when nothing survives."""
     import pandas as pd
 
     batch = pd.concat(list(pdfs), ignore_index=True)
@@ -67,8 +67,6 @@ def _screen_batch(pdfs, state, ts_col, value_col, hist_ts, hist_vals, max_histor
     if wm_ms > 0:
         batch = batch[(batch[ts_col].astype("int64") // 1_000_000) >= wm_ms]
     if batch.empty:
-        if state.exists:
-            state.update((hist_ts[-max_history:], hist_vals[-max_history:]))
         return None
     return batch.sort_values([ts_col, value_col], kind="mergesort")
 
@@ -80,7 +78,6 @@ def streaming_detect_anomalies(
     key_col: str,
     min_training_size: int = 30,
     confidence_percentage: float = 95.0,
-    max_history: int = MAX_HISTORY_DEFAULT,
 ) -> DataFrame:
     """Streaming ML_DETECT_ANOMALIES: emits one row per input row with
     flat report fields (is_anomaly, expected_value, lower_bound,
@@ -103,62 +100,31 @@ def streaming_detect_anomalies(
         import pandas as pd
 
         (k,) = key
-        hist_ts, hist_vals = _load_ring_buffer(state)
-        n_hist = len(hist_vals)
-        batch = _screen_batch(pdfs, state, ts_col, value_col, hist_ts, hist_vals, max_history)
+        prev, _ = _load_ar1_state(state)
+        batch = _screen_batch(pdfs, state, ts_col, value_col)
         if batch is None:
             return
-        new_ts = (batch[ts_col].astype("int64") // 1000).tolist()  # ns → µs
-        new_vals = batch[value_col].astype(float).tolist()
-
-        y = np.array(hist_vals + new_vals, dtype=np.float64)
-        fits = expanding_ar1(y)
-        n = len(y)
-        prev = np.maximum(np.arange(n) - 1, 0)
-        a, b, s = fits["a"][prev], fits["b"][prev], fits["sigma"][prev]
-        y_prev = np.concatenate([[y[0] if n else 0.0], y[:-1]])
-        expected = a + b * y_prev
-        lower, upper = expected - z * s, expected + z * s
-        trained = np.arange(n) >= min_training_size
-        finite = np.isfinite(s)
-        is_anom = trained & finite & ((y < lower) | (y > upper))
-
-        sl = slice(n_hist, n)  # only this batch's rows are emitted
-        # warm-up mask matches the batch operator exactly: BOTH batch paths
-        # NULL the whole report while the prev-fit sigma is non-finite (the
-        # raw `expected` is finite there — 0.0 or y[0] — so masking only on
-        # each value's own finiteness would leak those numbers)
-        fin = finite[sl]
-        out = pd.DataFrame(
+        y = batch[value_col].to_numpy(dtype=np.float64)
+        (is_anom, expected, lower, upper), end = anomaly_report(
+            y, z, min_training_size, prev
+        )
+        state.update((*end, int(batch[ts_col].astype("int64").iloc[-1] // 1000)))  # ns → µs
+        yield pd.DataFrame(
             {
                 "key": k,
                 "event_timestamp": batch[ts_col].values,
-                "observed_value": new_vals,
-                "is_anomaly": is_anom[sl],
-                "expected_value": [
-                    float(v) if f and np.isfinite(v) else None
-                    for v, f in zip(expected[sl], fin)
-                ],
-                "lower_bound": [
-                    float(v) if f and np.isfinite(v) else None
-                    for v, f in zip(lower[sl], fin)
-                ],
-                "upper_bound": [
-                    float(v) if f and np.isfinite(v) else None
-                    for v, f in zip(upper[sl], fin)
-                ],
+                "observed_value": y,
+                "is_anomaly": is_anom,
+                "expected_value": expected,
+                "lower_bound": lower,
+                "upper_bound": upper,
             }
         )
-
-        all_ts = hist_ts + new_ts
-        all_vals = hist_vals + new_vals
-        state.update((all_ts[-max_history:], all_vals[-max_history:]))
-        yield out
 
     return df.groupBy(key_col).applyInPandasWithState(
         score,
         outputStructType=out_schema,
-        stateStructType=_TS_VALS_STATE_SCHEMA,
+        stateStructType=_AR1_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -172,11 +138,11 @@ def streaming_forecast(
     horizon: int = 1,
     confidence_percentage: float = 95.0,
     min_training_size: int = 2,
-    max_history: int = MAX_HISTORY_DEFAULT,
 ) -> DataFrame:
     """Streaming ML_FORECAST: per input row, forecast the next `horizon`
-    steps from the state buffer + batch prefix (flat output: one row per
-    (input row, horizon step))."""
+    steps from the fit on the key's history up to that row (flat output:
+    one row per (input row, horizon step)).  Forecast timestamps step by
+    the key's last inter-arrival gap as of the micro-batch."""
     z = _zcrit(confidence_percentage)
     out_schema = T.StructType(
         [
@@ -191,69 +157,44 @@ def streaming_forecast(
             T.StructField("aic", T.DoubleType()),
         ]
     )
-    def forecast(key: Any, pdfs: Iterator, state: GroupState) -> Iterator:
-        import math
 
+    def forecast(key: Any, pdfs: Iterator, state: GroupState) -> Iterator:
         import pandas as pd
 
         (k,) = key
-        hist_ts, hist_vals = _load_ring_buffer(state)
-        n_hist = len(hist_vals)
-        batch = _screen_batch(pdfs, state, ts_col, value_col, hist_ts, hist_vals, max_history)
+        prev, last_ts_us = _load_ar1_state(state)
+        batch = _screen_batch(pdfs, state, ts_col, value_col)
         if batch is None:
             return
-        new_ts = (batch[ts_col].astype("int64") // 1000).tolist()
-        new_vals = batch[value_col].astype(float).tolist()
-
-        y = np.array(hist_vals + new_vals, dtype=np.float64)
-        ts_all = hist_ts + new_ts
-        fits = expanding_ar1(y)
-        step_us = ts_all[-1] - ts_all[-2] if len(ts_all) >= 2 else 1_000_000
+        ts_us = (batch[ts_col].astype("int64") // 1000).tolist()  # ns → µs
+        y = batch[value_col].to_numpy(dtype=np.float64)
+        known = ([last_ts_us] if last_ts_us is not None else []) + ts_us[-2:]
+        step_us = known[-1] - known[-2] if len(known) >= 2 else 1_000_000
         if step_us <= 0:
             step_us = 1_000_000
-
-        rows = []
-        for i in range(n_hist, len(y)):
-            if i + 1 < min_training_size or not np.isfinite(fits["sigma"][i]):
-                continue
-            a, b, s = fits["a"][i], fits["b"][i], fits["sigma"][i]
-            yhat, var_acc = y[i], 0.0
-            b2, pw = float(b) * float(b), 1.0  # product chain, not pow (ulp parity with batch)
-            for h in range(1, horizon + 1):
-                yhat = a + b * yhat
-                var_acc += pw
-                pw = pw * b2
-                band = z * s * math.sqrt(var_acc)
-                rows.append(
-                    {
-                        "key": k,
-                        "event_timestamp": pd.Timestamp(ts_all[i] * 1000),
-                        "current_value": float(y[i]),
-                        "forecast_timestamp": pd.Timestamp((ts_all[i] + h * step_us) * 1000),
-                        "forecast_value": float(yhat),
-                        "lower_bound": float(yhat - band),
-                        "upper_bound": float(yhat + band),
-                        # NULL (not NaN) for non-finite diagnostics — exact
-                        # parity with both batch paths (a constant history
-                        # gives sse=0: sigma clamps finite but aic is NaN)
-                        "rmse": float(fits["rmse"][i])
-                        if math.isfinite(fits["rmse"][i])
-                        else None,
-                        "aic": float(fits["aic"][i])
-                        if math.isfinite(fits["aic"][i])
-                        else None,
-                    }
-                )
-        state.update(((ts_all)[-max_history:], (hist_vals + new_vals)[-max_history:]))
-        yield pd.DataFrame(
-            rows,
-            columns=[f.name for f in out_schema.fields],
-        )
+        steps, end = forecast_steps(y, z, horizon, min_training_size, prev)
+        rows = [
+            (
+                k,
+                pd.Timestamp(t * 1000),
+                float(v),
+                pd.Timestamp((t + h * step_us) * 1000),
+                f,
+                lo,
+                hi,
+                rm,
+                ai,
+            )
+            for t, v, per_point in zip(ts_us, y, steps)
+            for h, f, lo, hi, rm, ai in per_point
+        ]
+        state.update((*end, ts_us[-1]))
+        yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
 
     return df.groupBy(key_col).applyInPandasWithState(
         forecast,
         outputStructType=out_schema,
-        stateStructType=_TS_VALS_STATE_SCHEMA,
+        stateStructType=_AR1_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -1,172 +1,26 @@
-"""transformWithStateInPandas variant of the streaming anomaly detector
+"""transformWithStateInPandas variant of the streaming CEP matcher
 (Spark 4's arbitrary-stateful-processing API — the successor to
-applyInPandasWithState, with typed state handles and RocksDB-friendly
-layouts).
+applyInPandasWithState, with typed state handles, explicit timers and
+RocksDB-friendly layouts).
 
-Both implementations share the expanding-AR(1) kernel AND the parity
-contract pieces: the (ts_us, vals) state schema and z-critical come from
-their single sources (`stateful._TS_VALS_STATE_SCHEMA`,
-`timeseries._zcrit`), the warm-up mask NULLs the whole report while the
-prev-fit sigma is non-finite (exactly like the batch operator and the
-applyInPandasWithState twin), and rows below the watermark are dropped
-rather than interleaved into the ring buffer out of event order.
-`streaming/stateful.py` remains the default (stable API); this module is
-the forward path and is exercised by tests/test_streaming_tws.py.
-
-ENVIRONMENT NOTES: the TWS state-server protocol requires
-``google.protobuf`` at runtime (pyspark's StateMessage_pb2) and a state
-store provider with column-family support (RocksDB).  In this sandbox
-protobuf is bootstrapped from the Google Cloud SDK's vendored runtime
-(health_monitor_cc_flink_spark.protobuf_shim) and the test sets the
-RocksDB provider, so tests/test_streaming_tws.py executes this path for
-real — asserting exact agreement with the batch `ml_detect_anomalies`.
-On a standard cluster install (protobuf via pip) it runs as-is.
+The TWS state-server protocol requires ``google.protobuf`` at runtime
+(pyspark's StateMessage_pb2) and a state store provider with
+column-family support (RocksDB).  Where protobuf is not installed,
+health_monitor_cc_flink_spark.protobuf_shim bootstraps the Google Cloud
+SDK's vendored runtime; tests/test_streaming_cep_tws.py sets the RocksDB
+provider and runs this path for real.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessor,
     StatefulProcessorHandle,
 )
-
-from ..functions.timeseries import _zcrit, expanding_ar1
-from .stateful import _TS_VALS_STATE_SCHEMA
-
-OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.LongType()),
-        T.StructField("event_ts_us", T.LongType()),
-        T.StructField("observed_value", T.DoubleType()),
-        T.StructField("is_anomaly", T.BooleanType()),
-        T.StructField("expected_value", T.DoubleType()),
-        T.StructField("lower_bound", T.DoubleType()),
-        T.StructField("upper_bound", T.DoubleType()),
-    ]
-)
-
-
-class AnomalyProcessor(StatefulProcessor):
-    """Per-key anomaly scorer with a capped history buffer in ValueState."""
-
-    def __init__(
-        self,
-        ts_col: str,
-        value_col: str,
-        min_training_size: int = 30,
-        confidence_percentage: float = 95.0,
-        max_history: int = 512,
-    ):
-        self.ts_col = ts_col
-        self.value_col = value_col
-        self.min_training_size = min_training_size
-        self.z = _zcrit(confidence_percentage)
-        self.max_history = max_history
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.state = handle.getValueState("history", _TS_VALS_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows: Iterator[pd.DataFrame], timerValues) -> Iterator[pd.DataFrame]:
-        (k,) = key
-        if self.state.exists():
-            hist_ts, hist_vals = self.state.get()
-            hist_ts, hist_vals = list(hist_ts), list(hist_vals)
-        else:
-            hist_ts, hist_vals = [], []
-        n_hist = len(hist_vals)
-
-        batch = pd.concat(list(rows), ignore_index=True)
-        # same late-data contract as the applyInPandasWithState twin: rows
-        # below the watermark are DROPPED, not scored — appending them would
-        # interleave the AR history out of event order and permanently skew
-        # every later prediction for the key.  timeMode="none" reports -1
-        # (no watermark: keep all, the watermark-free contract).
-        wm_ms = timerValues.getCurrentWatermarkInMs()
-        if wm_ms > 0:
-            batch = batch[(batch[self.ts_col].astype("int64") // 1_000_000) >= wm_ms]
-        if batch.empty:
-            if self.state.exists():
-                self.state.update(
-                    (hist_ts[-self.max_history:], hist_vals[-self.max_history:])
-                )
-            return
-        batch = batch.sort_values([self.ts_col, self.value_col], kind="mergesort")
-        new_ts = (batch[self.ts_col].astype("int64") // 1000).tolist()
-        new_vals = batch[self.value_col].astype(float).tolist()
-
-        y = np.array(hist_vals + new_vals, dtype=np.float64)
-        fits = expanding_ar1(y)
-        n = len(y)
-        prev = np.maximum(np.arange(n) - 1, 0)
-        a, b, s = fits["a"][prev], fits["b"][prev], fits["sigma"][prev]
-        y_prev = np.concatenate([[y[0] if n else 0.0], y[:-1]])
-        expected = a + b * y_prev
-        lower, upper = expected - self.z * s, expected + self.z * s
-        trained = np.arange(n) >= self.min_training_size
-        finite = np.isfinite(s)
-        is_anom = trained & finite & ((y < lower) | (y > upper))
-
-        sl = slice(n_hist, n)
-        # warm-up mask matches the batch operator exactly: the WHOLE report
-        # is NULL while the prev-fit sigma is non-finite (the raw expected
-        # is a finite 0.0 / y[0] there, so masking per-value leaks numbers
-        # where batch emits NULL) — same fix as the twin's
-        fin = finite[sl]
-        out = pd.DataFrame(
-            {
-                "key": int(k),
-                "event_ts_us": new_ts,
-                "observed_value": new_vals,
-                "is_anomaly": is_anom[sl],
-                "expected_value": [
-                    float(v) if f and np.isfinite(v) else None
-                    for v, f in zip(expected[sl], fin)
-                ],
-                "lower_bound": [
-                    float(v) if f and np.isfinite(v) else None
-                    for v, f in zip(lower[sl], fin)
-                ],
-                "upper_bound": [
-                    float(v) if f and np.isfinite(v) else None
-                    for v, f in zip(upper[sl], fin)
-                ],
-            }
-        )
-        self.state.update(
-            ((hist_ts + new_ts)[-self.max_history:], (hist_vals + new_vals)[-self.max_history:])
-        )
-        yield out
-
-    def close(self) -> None:
-        pass
-
-
-def tws_detect_anomalies(
-    df: DataFrame,
-    value_col: str,
-    ts_col: str,
-    key_col: str,
-    min_training_size: int = 30,
-    confidence_percentage: float = 95.0,
-    max_history: int = 512,
-    time_mode: str = "eventTime",
-) -> DataFrame:
-    """``time_mode="eventTime"`` (default) carries the stream's watermark
-    into the processor so late rows are screened exactly like the
-    applyInPandasWithState twin; pass ``"none"`` for watermark-free
-    streams (every row is kept — the twin's watermark-free contract)."""
-    return df.groupBy(key_col).transformWithStateInPandas(
-        AnomalyProcessor(ts_col, value_col, min_training_size, confidence_percentage, max_history),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode=time_mode,
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -371,21 +371,14 @@ def longkey(spark, mult: int, implementation: str) -> float:
     return round(best, 2)
 
 
-from health_monitor_cc_flink_spark.protobuf_shim import (  # noqa: E402
-    bootstrap_protobuf as _bootstrap_protobuf,
-)
-
-
-def longkey_stream(spark, mult: int, variant: str) -> dict:
+def longkey_stream(spark, mult: int) -> dict:
     """Streaming counterpart of the long-key probe: the same constant-key
-    (10 patients) × ``mult``-history shape, drained through the streaming
-    stateful ML paths in 4 time-sliced micro-batches.
+    (10 patients) × ``mult``-history shape, drained through
+    streaming_detect_anomalies (applyInPandasWithState, default
+    HDFS-backed store) in 4 time-sliced micro-batches.
 
-    variant 'aipws' = streaming_detect_anomalies (applyInPandasWithState,
-    capped ring buffer, default HDFS-backed store); variant 'tws' =
-    tws_detect_anomalies (transformWithStateInPandas under RocksDB).
-    Both cap per-key history (max_history), so state rows AND bytes must
-    stay ~flat as history grows — that is the claim this probe pins;
+    The per-key state is the AR(1) running sums, so state rows AND bytes
+    must stay flat as history grows — that is the claim this probe pins;
     drain time may grow ~linearly (every row is scored once).
     Returns {seconds, state_rows, state_bytes, out_rows}."""
     import shutil
@@ -401,7 +394,7 @@ def longkey_stream(spark, mult: int, variant: str) -> dict:
             F.col("vitals.heart_rate").cast("double").alias("observed_value"),
         )
     )
-    tmp = tempfile.mkdtemp(prefix=f"lkstream_{variant}_{mult}x_")
+    tmp = tempfile.mkdtemp(prefix=f"lkstream_{mult}x_")
     src = os.path.join(tmp, "src")
     os.makedirs(src)
     # 4 event-time slices, one file each with increasing mtimes so
@@ -428,38 +421,21 @@ def longkey_stream(spark, mult: int, variant: str) -> dict:
         shutil.copyfile(os.path.join(pdir, pf), dst)
         os.utime(dst, (now - 400 + i * 100, now - 400 + i * 100))
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    if variant == "tws":
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
     try:
+        from health_monitor_cc_flink_spark.streaming.stateful import (
+            streaming_detect_anomalies,
+        )
+
         stream = (
             spark.readStream.schema(flat.schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
             .withWatermark("event_time", "10 minutes")
         )
-        if variant == "tws":
-            from health_monitor_cc_flink_spark.streaming.tws import (
-                tws_detect_anomalies,
-            )
-
-            flagged = tws_detect_anomalies(
-                stream, value_col="observed_value", ts_col="event_time",
-                key_col="patient_id", min_training_size=30,
-            )
-        else:
-            from health_monitor_cc_flink_spark.streaming.stateful import (
-                streaming_detect_anomalies,
-            )
-
-            flagged = streaming_detect_anomalies(
-                stream, value_col="observed_value", ts_col="event_time",
-                key_col="patient_id", min_training_size=30,
-            )
+        flagged = streaming_detect_anomalies(
+            stream, value_col="observed_value", ts_col="event_time",
+            key_col="patient_id", min_training_size=30,
+        )
         t0 = time.perf_counter()
         q = (
             flagged.writeStream.outputMode("append")
@@ -485,16 +461,11 @@ def longkey_stream(spark, mult: int, variant: str) -> dict:
             "out_rows": state["out_rows"],
         }
     finally:
-        if prev_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev_provider)
         shutil.rmtree(tmp, ignore_errors=True)
 
 
 def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "--longkey-stream":
-        _bootstrap_protobuf()
         mult = int(sys.argv[2]) if len(sys.argv) > 2 else 16
         spark = build_session(
             app_name="scale-probe-longkey-stream",
@@ -502,16 +473,9 @@ def main() -> None:
             shuffle_partitions=8,
         )
         spark.sparkContext.setLogLevel("ERROR")
-        out = {}
-        for variant in ("aipws", "tws"):
-            out[variant] = {
-                "1x": longkey_stream(spark, 1, variant),
-                f"{mult}x": longkey_stream(spark, mult, variant),
-            }
+        out = {"1x": longkey_stream(spark, 1), f"{mult}x": longkey_stream(spark, mult)}
         print(
-            json.dumps(
-                {"probe": "longkey_stream_10_patients", "mult": mult, "variants": out}
-            ),
+            json.dumps({"probe": "longkey_stream_10_patients", "mult": mult, "runs": out}),
             flush=True,
         )
         spark.stop()

@@ -4,9 +4,8 @@ import math
 
 import numpy as np
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
-from health_monitor_cc_flink_spark.functions.sql_udtf import _OnlineAR1
 from health_monitor_cc_flink_spark.functions.timeseries import expanding_ar1
 
 series = st.lists(
@@ -20,7 +19,7 @@ series = st.lists(
 @given(series)
 def test_expanding_ar1_matches_naive_ols_everywhere(vals):
     y = np.array(vals, dtype=np.float64)
-    fits = expanding_ar1(y)
+    fits, _ = expanding_ar1(y)
     m = len(y)
     x, z = y[: m - 1], y[1:m]
     denom = (m - 1) * float(np.sum(x * x)) - float(np.sum(x)) ** 2
@@ -33,32 +32,49 @@ def test_expanding_ar1_matches_naive_ols_everywhere(vals):
     assert abs(fits["a"][m - 1] - a) <= 1e-6 * scale
 
 
+#: values ~1e15 with unit-scale deltas: catastrophic cancellation in the
+#: sums, where any reordering of the accumulation shows in the last bits
+_HOSTILE = (1e15 + np.random.default_rng(7).normal(0, 1, 200)).tolist()
+
+
+@settings(max_examples=200, deadline=None)
+@given(series, st.lists(st.integers(min_value=1, max_value=119), max_size=8))
+@example(_HOSTILE, [1, 2, 3, 57, 150])
+def test_expanding_ar1_carried_state_matches_one_shot(vals, cuts):
+    """Feeding a history to expanding_ar1 in pieces, carrying the state
+    from each call to the next, gives the same bits as one call on all
+    five fit arrays — the property the streaming operators rely on."""
+    y = np.array(vals, dtype=np.float64)
+    whole, whole_state = expanding_ar1(y)
+    bounds = sorted({min(c, len(y)) for c in cuts} | {0, len(y)})
+    state, parts = None, []
+    for lo, hi in zip(bounds, bounds[1:]):
+        fits, state = expanding_ar1(y[lo:hi], state)
+        parts.append(fits)
+    for f in ("a", "b", "sigma", "rmse", "aic"):
+        assert np.concatenate([p[f] for p in parts]).tobytes() == whole[f].tobytes(), f
+    assert state == whole_state
+
+
 @settings(max_examples=200, deadline=None)
 @given(series)
 def test_online_ar1_agrees_with_vectorized(vals):
+    """The online update — one point per call, state carried, as the
+    streaming operators see a key — gives the same bits as the
+    vectorized pass over the whole history, on every prefix."""
     y = np.array(vals, dtype=np.float64)
-    fits = expanding_ar1(y)
-    model = _OnlineAR1()
+    whole, _ = expanding_ar1(y)
+    state = None
     for i, v in enumerate(y):
-        model.update(float(v))
-        fit = model.fit()
-        if i >= 2 and fit is not None and math.isfinite(fits["sigma"][i]) and math.isfinite(fit[2]):
-            # skip ill-conditioned prefixes (near-zero regressor variance):
-            # both implementations are correct there but fp paths diverge
-            x = y[:i]
-            denom = i * float(np.sum(x * x)) - float(np.sum(x)) ** 2
-            if abs(denom) < 1e-6 * max(1.0, float(np.sum(x * x))):
-                continue
-            a, b, sigma, rmse, aic = fit
-            scale = max(1.0, abs(fits["a"][i]), abs(fits["b"][i]))
-            assert abs(a - fits["a"][i]) <= 1e-6 * scale
-            assert abs(b - fits["b"][i]) <= 1e-6 * scale
+        fit, state = expanding_ar1(y[i : i + 1], state)
+        for f in ("a", "b", "sigma", "rmse", "aic"):
+            assert fit[f].tobytes() == whole[f][i : i + 1].tobytes(), (i, f)
 
 
 @settings(max_examples=100, deadline=None)
 @given(st.lists(st.floats(min_value=0, max_value=200, allow_nan=False), min_size=5, max_size=60))
 def test_sigma_nonnegative_and_rmse_defined(vals):
-    fits = expanding_ar1(np.array(vals, dtype=np.float64))
+    fits, _ = expanding_ar1(np.array(vals, dtype=np.float64))
     n = len(vals)
     assert all(s >= 0 or math.isinf(s) for s in fits["sigma"])
     for i in range(3, n):
@@ -77,7 +93,7 @@ def test_forecast_beats_persistence_on_ar1_series(seed):
     y[0] = c / (1 - phi)
     for t in range(1, n):
         y[t] = c + phi * y[t - 1] + rng.normal(0, 1.0)
-    fits = expanding_ar1(y)
+    fits, _ = expanding_ar1(y)
     prev = np.arange(1, n) - 1
     pred = fits["a"][prev] + fits["b"][prev] * y[:-1]
     seg = slice(30, n - 1)
@@ -101,7 +117,7 @@ def test_forecast_average_skill():
         y[0] = c / (1 - phi)
         for t in range(1, n):
             y[t] = c + phi * y[t - 1] + rng.normal(0, 1.0)
-        fits = expanding_ar1(y)
+        fits, _ = expanding_ar1(y)
         prev = np.arange(1, n) - 1
         pred = fits["a"][prev] + fits["b"][prev] * y[:-1]
         seg = slice(30, n - 1)

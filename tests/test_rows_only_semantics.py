@@ -131,8 +131,8 @@ def test_simulator_source_batch_shape_and_determinism(spark, specs):
 
 def test_streaming_stateful_anomalies_matches_batch(spark, specs):
     """O31 wrapper: the applyInPandasWithState streaming drain must reproduce
-    the batch ml_detect_anomalies verdicts row-for-row (history under the
-    512-point state cap at this sf, so batch == streaming exactly)."""
+    the batch ml_detect_anomalies verdicts row-for-row (the state carries
+    the AR(1) running sums, so batch == streaming exactly)."""
     from health_monitor_cc_flink_spark.functions.timeseries import ml_detect_anomalies
     from health_monitor_cc_flink_spark.sources.testdata import load_table
 

@@ -52,34 +52,42 @@ def test_sql_pipeline_matches_dataframe_pipeline(spark, events):
     assert pats == {1}
 
 
-def test_online_ar1_bit_parity_on_hostile_floats():
-    """_OnlineAR1 (the SQL UDTF's incremental fit) must agree BIT-FOR-BIT
-    with the vectorized batch kernel even in the catastrophic-cancellation
-    regime (values ~1e15 with unit-scale deltas).  Regression: the prior
-    `s1 - y_last` reconstruction of the preceding-frame sums diverged on
-    6/200 prefixes of exactly this series — fl((s+y)-y) != s — which is why
-    the sums are now snapshotted before each update, mirroring
-    _ar1_fit_native's preceding-frame cumsum."""
-    import math
+def test_online_ar1_bit_parity_on_hostile_floats(spark):
+    """The SQL ml_forecast UDTF must agree BIT-FOR-BIT with the online
+    (one point per call, state carried) kernel even in the
+    catastrophic-cancellation regime: values ~1e15 with unit-scale
+    deltas, where fl((s+y)-y) != s and any reordering of the running
+    sums shows in the last bits."""
+    import datetime
 
     import numpy as np
 
-    from health_monitor_cc_flink_spark.functions.sql_udtf import _OnlineAR1
-    from health_monitor_cc_flink_spark.functions.timeseries import expanding_ar1
+    from health_monitor_cc_flink_spark.functions.sql_udtf import register_sql_ml_functions
+    from health_monitor_cc_flink_spark.functions.timeseries import _zcrit, forecast_steps
 
-    rng = np.random.default_rng(7)
-    y = 1e15 + rng.normal(0, 1, 200)
-    fits = expanding_ar1(y)
-    m = _OnlineAR1()
-    for i, v in enumerate(map(float, y)):
-        m.update(v)
-        f = m.fit()
-        if f is None:
-            continue
-        for mine, ref in zip(f, (fits[c][i] for c in ("a", "b", "sigma", "rmse", "aic"))):
-            assert mine == ref or (math.isnan(mine) and math.isnan(ref)), (
-                f"row {i}: {f} vs kernel"
-            )
+    y = (1e15 + np.random.default_rng(7).normal(0, 1, 200)).tolist()
+    t0 = datetime.datetime(2024, 1, 1)
+    rows = [(1, t0 + datetime.timedelta(seconds=i), v) for i, v in enumerate(y)]
+    spark.createDataFrame(
+        rows, "patient_id int, event_timestamp timestamp, observed_value double"
+    ).createOrReplaceTempView("hostile_vitals")
+    register_sql_ml_functions(spark)
+    try:
+        got = spark.sql(
+            "SELECT current_value, forecast_value, lower_bound, upper_bound, rmse, aic "
+            "FROM ml_forecast(TABLE(hostile_vitals) PARTITION BY patient_id "
+            "ORDER BY event_timestamp) ORDER BY event_timestamp"
+        ).collect()
+    finally:
+        spark.catalog.dropTempView("hostile_vitals")
+
+    want, state = [], None
+    for v in y:
+        steps, state = forecast_steps([v], _zcrit(95.0), 1, 2, state)
+        want += [(v, *step[1:]) for step in steps[0]]
+    assert len(got) == len(want) > 0
+    for i, (mine, ref) in enumerate(zip(map(tuple, got), want)):
+        assert mine == ref, f"row {i}: {mine} vs online kernel {ref}"
 
 
 def test_sql_pipeline_does_not_clobber_session_views(spark, events):

@@ -4,18 +4,26 @@ match the batch plan (modulo watermark-dropped late rows), and the
 end-to-end streaming pipeline must reproduce the golden bradycardia
 signal."""
 
+import glob
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from health_monitor_cc_flink_spark.fixtures import health_events_df
+from health_monitor_cc_flink_spark.functions.timeseries import (
+    ml_detect_anomalies,
+    ml_forecast,
+)
 from health_monitor_cc_flink_spark.plans.health_pipeline import windowed_vitals
 from health_monitor_cc_flink_spark.schemas import HEALTH_EVENT_SCHEMA
 from health_monitor_cc_flink_spark.sources.memory import patients_df
 from health_monitor_cc_flink_spark.streaming import (
     run_streaming_pipeline,
+    streaming_detect_anomalies,
+    streaming_forecast,
     streaming_windowed_vitals,
+    with_default_watermark,
 )
 
 
@@ -26,6 +34,117 @@ def events_path(spark, tmp_path_factory):
         "overwrite"
     ).parquet(path)
     return path
+
+
+@pytest.fixture(scope="module")
+def long_windowed(spark):
+    """1,200 one-second windows for each of 10 patients: longer than any
+    fixed per-key history a streaming operator might keep."""
+    events = health_events_df(spark, n_ticks=2400, interval_s=0.5, seed=42)
+    return windowed_vitals(events).cache()
+
+
+def _write_time_slices(df, ts_col, path, n_files):
+    """Write ``df`` to ``path`` as ``n_files`` contiguous event-time slices,
+    one parquet file each.  The file stream source reads files in
+    modification-time order, so each slice's mtime is set after the last."""
+    ts = sorted(r[0] for r in df.select(ts_col).distinct().collect())
+    starts = [ts[len(ts) * i // n_files] for i in range(n_files)] + [None]
+    for i, (lo, hi) in enumerate(zip(starts, starts[1:])):
+        cond = F.col(ts_col) >= F.lit(lo)
+        if hi is not None:
+            cond &= F.col(ts_col) < F.lit(hi)
+        before = set(glob.glob(os.path.join(path, "*.parquet")))
+        df.filter(cond).coalesce(1).write.mode("append").parquet(path)
+        for f in set(glob.glob(os.path.join(path, "*.parquet"))) - before:
+            os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
+
+
+def _drain(spark, frame, name):
+    q = (
+        frame.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return sorted(map(tuple, spark.table(name).collect()))
+
+
+@pytest.mark.parametrize("n_files", [1, 12])
+def test_streaming_ml_equals_batch_for_any_split(spark, long_windowed, tmp_path, n_files):
+    """Batch == streaming for any micro-batch split and any history
+    length: with 1,200 windows per key read one file per micro-batch,
+    every report and forecast field (NULL warm-up rows included) equals
+    the batch operators' output exactly.  The batch side is the pandas
+    reference path; native == pandas is pinned in tests/test_timeseries.py
+    (aic there to 1 ulp: the JVM's log may round differently)."""
+    path = str(tmp_path / "wv")
+    _write_time_slices(long_windowed, "event_timestamp", path, n_files)
+    src = with_default_watermark(
+        spark.readStream.schema(long_windowed.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path),
+        "event_timestamp",
+    )
+    args = dict(value_col="observed_value", ts_col="event_timestamp")
+
+    detected = _drain(
+        spark,
+        streaming_detect_anomalies(src, key_col="patient_id", **args),
+        f"split_detect_{n_files}",
+    )
+    report = ml_detect_anomalies(
+        long_windowed, key_cols=["patient_id"], implementation="pandas", **args
+    )
+    assert detected == sorted(
+        map(
+            tuple,
+            report.select(
+                "patient_id",
+                "event_timestamp",
+                "observed_value",
+                "report.is_anomaly",
+                "report.expected_value",
+                "report.lower_bound",
+                "report.upper_bound",
+            ).collect(),
+        )
+    )
+    assert len(detected) == 12_000
+    assert sum(r[4] is None for r in detected) == 30  # 3 warm-up rows per key
+
+    forecast = _drain(
+        spark,
+        streaming_forecast(src, key_col="patient_id", **args),
+        f"split_forecast_{n_files}",
+    )
+    batch_fc = ml_forecast(
+        long_windowed, key_cols=["patient_id"], implementation="pandas", **args
+    ).select(
+        "patient_id",
+        "event_timestamp",
+        "observed_value",
+        F.explode("forecast_values").alias("f"),
+    )
+    assert forecast == sorted(
+        map(
+            tuple,
+            batch_fc.select(
+                "patient_id",
+                "event_timestamp",
+                "observed_value",
+                "f.forecast_timestamp",
+                "f.forecast_value",
+                "f.lower_bound",
+                "f.upper_bound",
+                "f.rmse",
+                "f.aic",
+            ).collect(),
+        )
+    )
+    assert len(forecast) == 12_000 - 20  # no fit before a key's 3rd point
 
 
 def test_streaming_window_agg_equals_batch(spark, events_path, tmp_path):

@@ -31,7 +31,7 @@ def _series_df(spark, values, key=1, start=None, step_s=1.0):
 def test_expanding_ar1_matches_naive_ols():
     rng = np.random.default_rng(7)
     y = np.cumsum(rng.normal(0, 1, 50)) + 10
-    fits = expanding_ar1(y)
+    fits, _ = expanding_ar1(y)
     for m in (5, 17, 50):
         x, z = y[: m - 1], y[1:m]
         b, a = np.polyfit(x, z, 1)
