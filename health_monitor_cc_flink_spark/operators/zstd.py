@@ -956,7 +956,7 @@ def _seq_codes(seqs: list[tuple[int, int, int]],
 
 #: custom-sequence-table memo keyed by (symbol-count distribution,
 #: acc_log, ladder) — a pure function of those inputs (code caching,
-#: never data caching; the avro_ocf._DECODER_CACHE pattern): tiny
+#: never data caching; the avro_codec._DECODER_CACHE pattern): tiny
 #: pages across a task re-derive the same few hundred normalized
 #: distributions thousands of times.  Bounded, wholesale reset.
 _SEQ_TABLE_CACHE: dict[tuple, tuple | None] = {}
@@ -1285,7 +1285,7 @@ def _package_merge_lengths(freqs: dict[int, int],
 #: whole package-merge + two-state-FSE-weights pipeline (the profile's
 #: top cost on tiny-page workloads: ~3 distinct distributions per 10
 #: pages).  Code caching, never data caching; bounded, reset on
-#: overflow (avro_ocf._DECODER_CACHE pattern).  Cached values are
+#: overflow (avro_codec._DECODER_CACHE pattern).  Cached values are
 #: treated as read-only by every caller.
 _HUF_CODE_CACHE: dict[tuple, tuple | None] = {}
 

@@ -482,12 +482,41 @@ def encode_record(schema_json: str, record: dict) -> bytes:
     return buf.getvalue()
 
 
+#: compiled-decoder memo keyed by the exact schema JSON (a pure
+#: function of the schema — code caching, never data caching), one per
+#: process, so each Python worker compiles a schema once and reuses it
+#: for every record and batch it decodes; small bound, wholesale reset
+#: on overflow (schema sets are tiny in practice: one per topic or
+#: table format per process)
+_DECODER_CACHE: dict[str, object] = {}
+_DECODER_CACHE_MAX = 128
+
+
+def _decoder_for(schema_json: str):
+    dec = _DECODER_CACHE.get(schema_json)
+    if dec is None:
+        sch = json.loads(schema_json)
+        env: dict = {}
+        _register_names(sch, env)
+        dec = compile_decoder(sch, env)
+        if len(_DECODER_CACHE) >= _DECODER_CACHE_MAX:
+            _DECODER_CACHE.clear()
+        _DECODER_CACHE[schema_json] = dec
+    return dec
+
+
 def decode_record(schema_json: str, payload: bytes) -> dict:
-    """Decode one Avro-binary record (no framing)."""
-    sch = json.loads(schema_json)
-    env: dict = {}
-    _register_names(sch, env)
-    return _decode(sch, io.BytesIO(payload), env)
+    """Decode one Avro-binary record (no framing) through the
+    schema's compiled decoder (:func:`compile_decoder`, cached per
+    process by schema JSON).  Trailing bytes after the record are
+    ignored.
+
+    Raises ``ValueError`` on malformed or truncated input, never
+    ``IndexError`` or ``struct.error``."""
+    try:
+        return _decoder_for(schema_json)(payload, 0)[0]
+    except (IndexError, struct.error):
+        raise ValueError("avro record truncated") from None
 
 
 # ---------------------------------------------------------------------------

@@ -31,7 +31,7 @@ from ..operators.snappy import (
     snappy_compress_block,
     snappy_decompress_block,
 )
-from .avro_codec import read_long, write_long
+from .avro_codec import _decoder_for, read_long, write_long
 
 MAGIC = b"Obj\x01"
 MAX_BLOCK_BYTES = 1 << 26
@@ -107,15 +107,8 @@ def write_ocf(schema_json: str, records: list[dict], *,
     return buf.getvalue()
 
 
-#: compiled-decoder memo keyed by the exact schema JSON (a pure
-#: function of the schema — code caching, never data caching); small
-#: bound, wholesale reset on overflow (schema sets are tiny in
-#: practice: one per table format per process)
-_DECODER_CACHE: dict[str, object] = {}
-_DECODER_CACHE_MAX = 128
-
-
 _WRITER_SCHEMA_CACHE: dict[str, tuple] = {}
+_WRITER_SCHEMA_CACHE_MAX = 128
 
 
 def _writer_schema_for(schema_json: str) -> tuple:
@@ -126,26 +119,11 @@ def _writer_schema_for(schema_json: str) -> tuple:
         sch = json.loads(schema_json)
         env: dict = {}
         _register_names(sch, env)
-        if len(_WRITER_SCHEMA_CACHE) >= _DECODER_CACHE_MAX:
+        if len(_WRITER_SCHEMA_CACHE) >= _WRITER_SCHEMA_CACHE_MAX:
             _WRITER_SCHEMA_CACHE.clear()
         got = (sch, env)
         _WRITER_SCHEMA_CACHE[schema_json] = got
     return got
-
-
-def _decoder_for(schema_json: str):
-    dec = _DECODER_CACHE.get(schema_json)
-    if dec is None:
-        from .avro_codec import _register_names, compile_decoder
-
-        sch = json.loads(schema_json)
-        env: dict = {}
-        _register_names(sch, env)
-        dec = compile_decoder(sch, env)
-        if len(_DECODER_CACHE) >= _DECODER_CACHE_MAX:
-            _DECODER_CACHE.clear()
-        _DECODER_CACHE[schema_json] = dec
-    return dec
 
 
 def read_ocf(data: bytes) -> dict:
@@ -176,11 +154,9 @@ def read_ocf(data: bytes) -> dict:
     sync = buf.read(16)
     if len(sync) != 16:
         raise ValueError("truncated OCF header sync marker")
-    # compiled closure decoder, memoized by the exact schema JSON:
-    # interpretive per-record dispatch (the old _decode_stream)
-    # dominated manifest-heavy readers, and manifest/log schemas
-    # repeat across thousands of tiny OCFs, so even the one-time
-    # compile is amortized across files, not paid per file
+    # compiled closure decoder from the shared per-process cache:
+    # manifest/log schemas repeat across thousands of tiny OCFs, so
+    # even the one-time compile is amortized across files
     decode = _decoder_for(schema_json)
     records: list[dict] = []
     n_blocks = 0

@@ -80,10 +80,12 @@ def decode_avro_values(
     as a Catalyst expression either way.
 
     decoder="jvm"     → spark-avro `from_avro` (vectorized; production).
-    decoder="python"  → Arrow-batched mapInPandas over the pure-Python
-                        codec (`sources.avro_codec`) — the env-gated
-                        fallback for clusters without the spark-avro
-                        module, and the path integration tests use.
+    decoder="python"  → Arrow-batched mapInPandas over the
+                        schema-compiled decoder (`sources.avro_codec.
+                        decode_record`), compiled once and cached per
+                        Python worker process — the env-gated fallback
+                        for clusters without the spark-avro module, and
+                        the path integration tests use.
     """
     schema_json = avro_schema_json(value_schema)
     value = F.col("value")

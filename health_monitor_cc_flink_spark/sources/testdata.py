@@ -66,35 +66,44 @@ def events_raw_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
     return spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
 
-#: schema-inference cache for the streaming sources, keyed by the
-#: file's identity (path, mtime, size) — the catalog-metadata cache
-#: every real engine keeps (cf. Spark's own filesource file-index
-#: cache).  Streaming reads require an explicit schema, and without
-#: the cache every streaming query paid a full spark.read.parquet()
-#: schema-inference job per invocation for a file that never changes.
-_STREAM_SCHEMA_CACHE: dict[tuple, T.StructType] = {}
+#: schema-inference cache for the streaming sources: path ->
+#: (signature, schema), the signature being the file's identity
+#: (mtime, size) — the catalog-metadata cache every real engine keeps
+#: (cf. Spark's own filesource file-index cache).  Streaming reads
+#: require an explicit schema, and without the cache every streaming
+#: query paid a full spark.read.parquet() schema-inference job per
+#: invocation for a file that never changes.  A changed signature
+#: replaces the path's entry, so the cache holds one entry per path.
+_STREAM_SCHEMA_CACHE: dict[str, tuple] = {}
+
+
+def _path_signature(path: str) -> tuple:
+    import os
+
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (st.st_mtime_ns, st.st_size)
+    # a file rewritten in place inside the directory does not bump the
+    # directory's own mtime (nor a parent's, for a partition
+    # subdirectory) — sign every file below it by (relative path,
+    # mtime, size) so any change invalidates
+    sig = []
+    for root, _dirs, files in os.walk(path):
+        for name in files:
+            full = os.path.join(root, name)
+            st = os.stat(full)
+            sig.append((os.path.relpath(full, path),
+                        st.st_mtime_ns, st.st_size))
+    return tuple(sorted(sig))
 
 
 def _cached_schema(spark: SparkSession, key_path: str, infer) -> T.StructType:
-    import os
-
-    st = os.stat(key_path)
-    if os.path.isdir(key_path):
-        # a file rewritten in place inside the directory does not bump
-        # the directory's own mtime — key on the part-file listing
-        # (name, mtime, size) so any change invalidates (ADVICE r16)
-        with os.scandir(key_path) as it:
-            sig = tuple(sorted(
-                (e.name, e.stat().st_mtime_ns, e.stat().st_size)
-                for e in it if e.is_file()))
-        key = (key_path, sig)
-    else:
-        key = (key_path, st.st_mtime_ns, st.st_size)
-    got = _STREAM_SCHEMA_CACHE.get(key)
-    if got is None:
-        got = infer()
-        _STREAM_SCHEMA_CACHE[key] = got
-    return got
+    sig = _path_signature(key_path)
+    got = _STREAM_SCHEMA_CACHE.get(key_path)
+    if got is None or got[0] != sig:
+        got = (sig, infer())
+        _STREAM_SCHEMA_CACHE[key_path] = got
+    return got[1]
 
 
 def _stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -76,6 +76,16 @@ def test_codec_roundtrip_and_framing():
     assert decoded == SAMPLE
 
 
+def test_decode_record_truncated_payload_raises_value_error():
+    """Every strict prefix of an encoded event is malformed input and
+    raises ValueError, whichever primitive the cut lands in (varint,
+    string body, or the trailing float32)."""
+    payload = encode_record(SCHEMA_JSON, SAMPLE)
+    for n in range(len(payload)):
+        with pytest.raises(ValueError):
+            decode_record(SCHEMA_JSON, payload[:n])
+
+
 def test_python_codec_matches_java_avro(spark):
     """Spec conformance: bytes from the Python encoder must decode
     identically in the reference Java Avro implementation (the library
@@ -412,9 +422,12 @@ except ImportError:  # pragma: no cover
     _HAVE_HYPOTHESIS = False
 
 if _HAVE_HYPOTHESIS:
+    import io
     import json
     import math
     import struct as _struct
+
+    from health_monitor_cc_flink_spark.sources.avro_codec import _decode
 
     _FUZZ_SCHEMA = json.dumps(
         {
@@ -456,9 +469,13 @@ if _HAVE_HYPOTHESIS:
     def test_codec_roundtrip_property(s, i, l, f, d, b, x, y):
         """encode→decode is the identity for every value in the type
         domain, including extreme zigzag varints (±2^63) and float32
-        denormals; NaN excluded (NaN != NaN breaks equality, not codec)."""
+        denormals, and the schema-interpreting ``_decode`` returns the
+        same dict; NaN excluded (NaN != NaN breaks equality, not codec)."""
         rec = {"s": s, "i": i, "l": l, "f": f, "d": d, "b": b, "nested": {"x": x, "y": y}}
-        out = decode_record(_FUZZ_SCHEMA, encode_record(_FUZZ_SCHEMA, rec))
+        blob = encode_record(_FUZZ_SCHEMA, rec)
+        out = decode_record(_FUZZ_SCHEMA, blob)
+        # the compiled decoder and the interpreter agree value for value
+        assert _decode(json.loads(_FUZZ_SCHEMA), io.BytesIO(blob), {}) == out
         # float32 round-trips through its 4-byte representation
         expect_f = _struct.unpack("<f", _struct.pack("<f", f))[0]
         assert out["s"] == s and out["i"] == i and out["l"] == l

@@ -6,6 +6,7 @@ change fails here, not in the driver's correctness gate."""
 
 from pyspark.sql import functions as F, types as T
 
+from health_monitor_cc_flink_spark.sources import testdata
 from health_monitor_cc_flink_spark.sources.testdata import (
     events_stream,
     load_events,
@@ -61,3 +62,32 @@ def test_events_stream_matches_batch(spark, sf_smoke_dir):
         for r in load_events(spark, sf_smoke_dir).select("event_id", "user_id", "ts").collect()
     }
     assert got == want
+
+
+def test_stream_schema_cache_reinfers_on_rewrite_one_entry_per_path(
+    tmp_path, monkeypatch
+):
+    """The streaming schema cache signs every file below a table
+    directory, subdirectories included, and replaces the path's entry
+    when that signature changes instead of growing a stale one."""
+    table = tmp_path / "events.parquet"
+    (table / "day=1").mkdir(parents=True)
+    top = table / "part-00000.parquet"
+    nested = table / "day=1" / "part-00001.parquet"
+    top.write_bytes(b"a")
+    nested.write_bytes(b"b")
+    key = str(table)
+    monkeypatch.setattr(testdata, "_STREAM_SCHEMA_CACHE", {})
+    calls = []
+
+    def infer():
+        calls.append(1)
+        return len(calls)
+
+    assert testdata._cached_schema(None, key, infer) == 1
+    assert testdata._cached_schema(None, key, infer) == 1  # cache hit
+    for n, part in enumerate((top, nested), start=2):
+        part.write_bytes(part.read_bytes() * 2)  # rewritten in place
+        assert testdata._cached_schema(None, key, infer) == n
+        assert testdata._cached_schema(None, key, infer) == n
+        assert len(testdata._STREAM_SCHEMA_CACHE) == 1
