@@ -65,6 +65,19 @@ def _row_to_record(row) -> dict:
     }
 
 
+KAFKA_SHAPE = "value binary, timestamp timestamp"
+
+
+def _framed_records(spark, rows):
+    """Typed event rows → a Kafka-record-shaped batch frame of
+    Confluent-framed Avro values, record timestamp = event_time."""
+    framed = [
+        (bytearray(confluent_frame(encode_record(SCHEMA_JSON, _row_to_record(r)), 7)), r.event_time)
+        for r in rows
+    ]
+    return spark.createDataFrame(framed, KAFKA_SHAPE)
+
+
 def test_codec_roundtrip_and_framing():
     payload = encode_record(SCHEMA_JSON, SAMPLE)
     framed = confluent_frame(payload, schema_id=100042)
@@ -122,18 +135,10 @@ def test_wire_format_stream_to_windowed_vitals(spark, tmp_path):
     events = health_events_df(spark, n_ticks=60, interval_s=0.5, seed=7)
     rows = events.collect()
 
-    framed = [
-        (
-            bytearray(confluent_frame(encode_record(SCHEMA_JSON, _row_to_record(r)), 7)),
-            r.event_time,
-        )
-        for r in rows
-    ]
-    kafka_shape = "value binary, timestamp timestamp"
     records_path = str(tmp_path / "records")
-    spark.createDataFrame(framed, kafka_shape).write.parquet(records_path)
+    _framed_records(spark, rows).write.parquet(records_path)
 
-    stream = spark.readStream.schema(kafka_shape).parquet(records_path)
+    stream = spark.readStream.schema(KAFKA_SHAPE).parquet(records_path)
     decoded = decode_avro_values(stream, VALUE_SCHEMA, decoder="python")
     agg = windowed_vitals(decoded.withWatermark("event_time", "10 seconds"))
 
@@ -165,6 +170,124 @@ def test_wire_format_stream_to_windowed_vitals(spark, tmp_path):
     wm = max(r.event_time for r in rows) - dt.timedelta(seconds=10)
     expected_closed = {k for k, r in batch.items() if k[1] < wm}
     assert set(got) >= expected_closed
+
+
+def test_batch_decode_timestamps_are_exact(spark):
+    """timestamp-micros decode to the exact microsecond over the whole
+    range Spark holds, top-level and nested: no float round trip drops
+    the last microsecond of a far-future value, and 9999-12-31
+    23:59:59.999999 does not overflow into year 10000."""
+    inner = T.StructType([T.StructField("ts", T.TimestampType())])
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("inner", inner),
+        ]
+    )
+    schema_json = avro_schema_json(schema)
+    micros = [-1, 1, 253402300799000001, 253402300799999999]
+    records = spark.createDataFrame(
+        [
+            (bytearray(confluent_frame(encode_record(schema_json, {"id": i, "ts": us, "inner": {"ts": us}}), 7)),
+             dt.datetime(2026, 1, 1))
+            for i, us in enumerate(micros)
+        ],
+        KAFKA_SHAPE,
+    )
+    decoded = decode_avro_values(records, schema, decoder="python")
+    got = sorted(
+        decoded.select(
+            "id",
+            F.unix_micros("ts"),
+            F.unix_micros("inner.ts"),
+            F.col("ts").cast("string"),
+            F.col("inner.ts").cast("string"),
+        ).collect()
+    )
+    epoch = dt.datetime(1970, 1, 1)
+    expected = []
+    for i, us in enumerate(micros):
+        text = (epoch + dt.timedelta(microseconds=us)).isoformat(" ")
+        expected.append((i, us, us, text, text))
+    assert [tuple(r) for r in got] == expected
+    assert expected[-1][3] == "9999-12-31 23:59:59.999999"
+
+
+def test_batch_decode_runs_once_for_s3_and_s4(spark, tmp_path):
+    """A batch decode is stored by its first action and read back by every
+    later one: neither the S3 join count nor a second aggregate re-runs the
+    Python decoder (no MapInArrow/MapInPandas/PythonUDF in their executed
+    plans; both scan the checkpointed rows).  The decoded rows equal the
+    typed fixture, and a streaming input is still decoded in its plan."""
+    from health_monitor_cc_flink_spark.plans.health_pipeline import enriched_events
+    from health_monitor_cc_flink_spark.sources import patients_df
+
+    events = health_events_df(spark, n_ticks=40, interval_s=0.5, seed=7)
+    decoded = decode_avro_values(_framed_records(spark, events.collect()), VALUE_SCHEMA, decoder="python")
+
+    s3 = enriched_events(decoded, patients_df(spark))
+    assert s3.count() > 0
+    agg = decoded.groupBy("patient_id").agg(F.sum("vitals.heart_rate").alias("hr"))
+    assert len(agg.collect()) == 10
+    for df in (s3, agg):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for node in ("MapInArrow", "MapInPandas", "PythonUDF"):
+            assert node not in plan, plan
+        assert "ExistingRDD" in plan, plan
+
+    assert decoded.exceptAll(events).count() == 0
+    assert events.exceptAll(decoded).count() == 0
+
+    path = str(tmp_path / "records")
+    _framed_records(spark, events.limit(5).collect()).write.parquet(path)
+    streamed = decode_avro_values(spark.readStream.schema(KAFKA_SHAPE).parquet(path), VALUE_SCHEMA, decoder="python")
+    assert streamed.isStreaming
+    assert "MapInArrow" in streamed._jdf.queryExecution().logical().toString()
+
+
+def test_batch_decode_checkpoint_is_released(spark):
+    """The stored rows of a batch decode live only as long as the frame:
+    after three decode-and-count cycles the frames are dropped, and once
+    both garbage collectors have run the ContextCleaner frees every
+    stored block, back to the count from before the cycles."""
+    import gc
+    import time
+
+    rows = health_events_df(spark, n_ticks=20, interval_s=0.5, seed=7).collect()
+
+    def stored():
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    before = len(stored())
+    frames = []
+    for _ in range(3):
+        decoded = decode_avro_values(_framed_records(spark, rows), VALUE_SCHEMA, decoder="python")
+        assert decoded.count() == len(rows)
+        frames.append(decoded)
+    # the checkpointed RDD each frame scans holds the stored blocks
+    ids = {f._jdf.queryExecution().analyzed().rdd().id() for f in frames}
+    assert len(ids) == 3 and ids <= stored()
+    del frames, decoded
+
+    deadline = time.monotonic() + 30
+    while (ids & stored() or len(stored()) > before) and time.monotonic() < deadline:
+        gc.collect()
+        spark._jvm.java.lang.System.gc()
+        time.sleep(0.5)
+    assert not ids & stored()
+    assert len(stored()) <= before
+
+
+def test_batch_decode_truncated_payload_fails_the_job(spark):
+    """decode_record's ValueError contract holds at frame level: a cut
+    payload in a batch decode fails the action with the codec's message."""
+    payload = encode_record(SCHEMA_JSON, SAMPLE)
+    records = spark.createDataFrame(
+        [(bytearray(confluent_frame(payload[:-2], 7)), dt.datetime(2026, 1, 1))], KAFKA_SHAPE
+    )
+    with pytest.raises(Exception, match="avro record truncated"):
+        decode_avro_values(records, VALUE_SCHEMA, decoder="python").count()
 
 
 # ---------------------------------------------------------------------------
