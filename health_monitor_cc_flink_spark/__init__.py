@@ -14,7 +14,7 @@ Layout
 - :mod:`.session`    SparkSession builder tuned for this engine
 - :mod:`.schemas`    canonical StructType schemas (health events, patients, testdata)
 - :mod:`.catalog`    connection registry + table/view catalog (S1/S2 surrogate)
-- :mod:`.sources`    parquet/JDBC/Kafka/memory source adapters
+- :mod:`.sources`    parquet/Kafka/memory source adapters
 - :mod:`.fixtures`   deterministic port of the reference's health simulator
 - :mod:`.functions`  scalar & time-series functions (anomaly detection, forecast)
 - :mod:`.operators`  relational + data-pipeline operators (dedup, similarity, text)

@@ -50,11 +50,11 @@ class Engine:
         return run_pipeline(events, patients, catalog=self.catalog, materialize=materialize)
 
     def run_health_pipeline_sql(
-        self, events: DataFrame, patients: DataFrame, **params
+        self, events: DataFrame, patients: DataFrame
     ) -> dict[str, DataFrame]:
         from .plans.health_pipeline_sql import run_pipeline_sql
 
-        return run_pipeline_sql(self.spark, events, patients, **params)
+        return run_pipeline_sql(self.spark, events, patients)
 
     # -- testdata convenience -------------------------------------------------
     def register_testdata(self, sf_dir: str) -> dict[str, DataFrame]:

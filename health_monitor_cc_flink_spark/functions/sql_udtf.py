@@ -29,7 +29,14 @@ import datetime
 
 from pyspark.sql.functions import udtf
 
-from .timeseries import _zcrit, anomaly_report, forecast_steps
+from .timeseries import (
+    CONFIDENCE_PERCENTAGE,
+    HORIZON,
+    MIN_TRAINING_SIZE,
+    _zcrit,
+    anomaly_report,
+    forecast_steps,
+)
 
 
 class _KeyBuffer:
@@ -61,7 +68,12 @@ class MLDetectAnomalies:
     def __init__(self):
         self.key = _KeyBuffer()
 
-    def eval(self, row, min_training_size: int = 30, confidence_percentage: float = 95.0):
+    def eval(
+        self,
+        row,
+        min_training_size: int = MIN_TRAINING_SIZE,
+        confidence_percentage: float = CONFIDENCE_PERCENTAGE,
+    ):
         self.key.add(row, min_training_size, confidence_percentage)
 
     def terminate(self):
@@ -95,8 +107,8 @@ class MLForecast:
     def eval(
         self,
         row,
-        horizon: int = 1,
-        confidence_percentage: float = 95.0,
+        horizon: int = HORIZON,
+        confidence_percentage: float = CONFIDENCE_PERCENTAGE,
         min_training_size: int = 2,
     ):
         self.key.add(row, horizon, confidence_percentage, min_training_size)

@@ -44,6 +44,9 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
 __all__ = [
+    "MIN_TRAINING_SIZE",
+    "CONFIDENCE_PERCENTAGE",
+    "HORIZON",
     "ml_detect_anomalies",
     "ml_forecast",
     "expanding_ar1",
@@ -57,6 +60,13 @@ _NAN = float("nan")
 
 #: number of estimated parameters (intercept, slope) for AIC/df purposes
 _N_PARAMS = 2
+
+#: ML_DETECT_ANOMALIES warm-up, `minTrainingSize` (flink_statements.tf:195)
+MIN_TRAINING_SIZE = 30
+#: band width of both ML functions, `confidencePercentage` (flink_statements.tf:196)
+CONFIDENCE_PERCENTAGE = 95.0
+#: ML_FORECAST steps ahead, `horizon` (flink_statements.tf:309)
+HORIZON = 1
 
 
 def _zcrit(confidence_percentage: float) -> float:
@@ -349,8 +359,8 @@ def ml_detect_anomalies(
     value_col: str,
     ts_col: str,
     key_cols: Sequence[str],
-    min_training_size: int = 30,
-    confidence_percentage: float = 95.0,
+    min_training_size: int = MIN_TRAINING_SIZE,
+    confidence_percentage: float = CONFIDENCE_PERCENTAGE,
     output_col: str = "report",
     implementation: str = "native",
 ) -> DataFrame:
@@ -434,8 +444,8 @@ def ml_forecast(
     value_col: str,
     ts_col: str,
     key_cols: Sequence[str],
-    horizon: int = 1,
-    confidence_percentage: float = 95.0,
+    horizon: int = HORIZON,
+    confidence_percentage: float = CONFIDENCE_PERCENTAGE,
     min_training_size: int = 2,
     output_col: str = "forecast_values",
     implementation: str = "native",

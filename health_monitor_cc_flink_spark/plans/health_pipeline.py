@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.timeseries import ml_detect_anomalies, ml_forecast
 
+#: S4's smoothing tumble (flink_statements.tf:181)
+WINDOW = "1 second"
 #: bradycardia alert threshold, bpm (flink_statements.tf:333)
 ALERT_THRESHOLD = 40.0
 
@@ -54,11 +56,13 @@ def enriched_events(events: DataFrame, patients: DataFrame) -> DataFrame:
     )
 
 
-def windowed_vitals(events: DataFrame, window: str = "1 second") -> DataFrame:
+def windowed_vitals(events: DataFrame) -> DataFrame:
     """S4's first CTE (flink_statements.tf:174-183): 1 s tumbling average
-    heart rate per patient; emits `event_timestamp` = window_time."""
+    heart rate per patient; emits `event_timestamp` = window_time.  On a
+    stream the caller sets the watermark (append mode emits each window
+    once the watermark closes it)."""
     return (
-        events.groupBy(F.window("event_time", window).alias("w"), "patient_id")
+        events.groupBy(F.window("event_time", WINDOW).alias("w"), "patient_id")
         .agg(F.avg("vitals.heart_rate").alias("avg_heart_rate"))
         .select(
             "patient_id",
@@ -68,22 +72,14 @@ def windowed_vitals(events: DataFrame, window: str = "1 second") -> DataFrame:
     )
 
 
-def enriched_events_flagged(
-    events: DataFrame,
-    window: str = "1 second",
-    min_training_size: int = 30,
-    confidence_percentage: float = 95.0,
-) -> DataFrame:
+def enriched_events_flagged(events: DataFrame) -> DataFrame:
     """S4 (flink_statements.tf:171-212): windowed smoothing +
     ML_DETECT_ANOMALIES over the cumulative per-patient frame."""
-    wv = windowed_vitals(events, window)
     return ml_detect_anomalies(
-        wv,
+        windowed_vitals(events),
         value_col="observed_value",
         ts_col="event_timestamp",
         key_cols=["patient_id"],
-        min_training_size=min_training_size,
-        confidence_percentage=confidence_percentage,
         output_col="report",
     )
 
@@ -93,12 +89,7 @@ def filtered_enriched_events(flagged: DataFrame) -> DataFrame:
     return flagged.filter(F.col("report.is_anomaly") == F.lit(False))
 
 
-def heartbeat_alerts(
-    filtered: DataFrame,
-    horizon: int = 1,
-    confidence_percentage: float = 95.0,
-    threshold: float = ALERT_THRESHOLD,
-) -> DataFrame:
+def heartbeat_alerts(filtered: DataFrame) -> DataFrame:
     """S6 (flink_statements.tf:297-334): ML_FORECAST on the cleaned
     series, UNNEST the forecast array, alert where forecast < 40 bpm."""
     fc = ml_forecast(
@@ -106,8 +97,6 @@ def heartbeat_alerts(
         value_col="observed_value",
         ts_col="event_timestamp",
         key_cols=["patient_id"],
-        horizon=horizon,
-        confidence_percentage=confidence_percentage,
         output_col="forecast_values",
     )
     exploded = fc.select(
@@ -123,7 +112,7 @@ def heartbeat_alerts(
         F.col("f.forecast_value").alias("forecast_value"),
         F.col("f.lower_bound").alias("lower_bound"),
         F.col("f.upper_bound").alias("upper_bound"),
-    ).filter(F.col("forecast_value") < F.lit(threshold))
+    ).filter(F.col("forecast_value") < F.lit(ALERT_THRESHOLD))
 
 
 def run_pipeline(
@@ -131,7 +120,6 @@ def run_pipeline(
     patients: DataFrame,
     catalog=None,
     materialize: bool = False,
-    window: str = "1 second",
 ) -> dict[str, DataFrame]:
     """Run all four stages; returns every stage's frame by its reference
     name.  With a catalog, each stage is registered under its name
@@ -162,7 +150,7 @@ def run_pipeline(
         "enriched_events", enriched_events(events, patients)
     )  # dead-end branch
     stages["enriched_events_flagged"] = stage(
-        "enriched_events_flagged", enriched_events_flagged(events, window=window)
+        "enriched_events_flagged", enriched_events_flagged(events)
     )
     stages["filtered_enriched_events"] = stage(
         "filtered_enriched_events",

@@ -31,6 +31,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.sql_udtf import register_sql_ml_functions
+from ..functions.timeseries import CONFIDENCE_PERCENTAGE, HORIZON, MIN_TRAINING_SIZE
+from .health_pipeline import ALERT_THRESHOLD, WINDOW
 
 S3_ENRICHED_EVENTS = """
 CREATE OR REPLACE TEMPORARY VIEW {p}enriched_events AS
@@ -50,7 +52,7 @@ CREATE OR REPLACE TEMPORARY VIEW {p}windowed_vitals AS
 SELECT patient_id,
        window.end - INTERVAL 1 MILLISECOND AS event_timestamp,
        avg(vitals.heart_rate) AS observed_value
-FROM (SELECT *, window(event_time, '1 second') AS window FROM {p}events)
+FROM (SELECT *, window(event_time, '{window}') AS window FROM {p}events)
 GROUP BY patient_id, window
 """
 
@@ -86,30 +88,28 @@ WHERE forecast_value < {threshold}
 
 
 def run_pipeline_sql(
-    spark: SparkSession,
-    events: DataFrame,
-    patients: DataFrame,
-    min_training_size: int = 30,
-    confidence: float = 95.0,
-    horizon: int = 1,
-    threshold: float = 40.0,
+    spark: SparkSession, events: DataFrame, patients: DataFrame
 ) -> dict[str, DataFrame]:
     """Execute S3..S6 as SQL statements; returns the stage views (keyed
     by the canonical stage names — the backing temp views carry a unique
-    per-run prefix so a shared session's own views are never clobbered)."""
+    per-run prefix so a shared session's own views are never clobbered).
+    The statements' literals are the reference's, from the constants the
+    DataFrame pipeline uses."""
     register_sql_ml_functions(spark)
     p = f"hmsql_{uuid.uuid4().hex[:8]}_"
     events.createOrReplaceTempView(f"{p}events")
     patients.createOrReplaceTempView(f"{p}patients")
-    spark.sql(S3_ENRICHED_EVENTS.format(p=p))
-    spark.sql(S4_WINDOWED_VITALS.format(p=p))
-    spark.sql(
-        S4_FLAGGED.format(p=p, min_training_size=min_training_size, confidence=confidence)
-    )
-    spark.sql(S5_FILTERED.format(p=p))
-    spark.sql(
-        S6_ALERTS.format(p=p, horizon=horizon, confidence=confidence, threshold=threshold)
-    )
+    for statement in (S3_ENRICHED_EVENTS, S4_WINDOWED_VITALS, S4_FLAGGED, S5_FILTERED, S6_ALERTS):
+        spark.sql(
+            statement.format(
+                p=p,
+                window=WINDOW,
+                min_training_size=MIN_TRAINING_SIZE,
+                confidence=CONFIDENCE_PERCENTAGE,
+                horizon=HORIZON,
+                threshold=ALERT_THRESHOLD,
+            )
+        )
     return {
         name: spark.table(p + name)
         for name in (

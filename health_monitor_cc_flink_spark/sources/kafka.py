@@ -7,9 +7,9 @@ timestamp (flink_statements.tf:119,181).  The Spark-native equivalent is
 Kafka `timestamp` metadata column surfaced as ``event_time``.
 
 Notes:
-- Confluent's wire format prefixes Avro payloads with a 5-byte magic +
-  schema-id header; ``confluent_wire_format=True`` strips it before
-  `from_avro` (plain Avro framing otherwise).
+- The reference topic's values are Schema-Registry framed: Confluent's
+  wire format prefixes each Avro payload with a 5-byte magic +
+  schema-id header, which the decode strips before `from_avro`.
 - `from_avro` ships in the external spark-avro package; this module
   degrades to a clear error if the JVM class is absent so the rest of
   the engine stays importable in minimal test environments.
@@ -68,7 +68,6 @@ def avro_schema_json(schema: StructType, name: str = "Event") -> str:
 def decode_avro_values(
     records: DataFrame,
     value_schema: StructType,
-    confluent_wire_format: bool = True,
     decoder: str = "jvm",
 ) -> DataFrame:
     """Kafka-record-shaped DataFrame (``value`` binary + ``timestamp``) →
@@ -98,10 +97,8 @@ def decode_avro_values(
     uncheckpointed, as is the jvm decoder's plan.
     """
     schema_json = avro_schema_json(value_schema)
-    value = F.col("value")
-    if confluent_wire_format:
-        # strip magic byte (1) + schema id (4) of the SR wire format
-        value = F.expr("substring(value, 6, length(value) - 5)")
+    # strip magic byte (1) + schema id (4) of the SR wire format
+    value = F.expr("substring(value, 6, length(value) - 5)")
 
     if decoder == "jvm":
         try:
@@ -155,7 +152,6 @@ def read_kafka_avro_stream(
     topic: str,
     value_schema: StructType,
     starting_offsets: str = "latest",
-    confluent_wire_format: bool = True,
     decoder: str = "jvm",
     source_format: str = "kafka",
     extra_options: dict | None = None,
@@ -181,6 +177,4 @@ def read_kafka_avro_stream(
     for k, v in (extra_options or {}).items():
         reader = reader.option(k, v)
     raw = reader.load()
-    return decode_avro_values(
-        raw, value_schema, confluent_wire_format=confluent_wire_format, decoder=decoder
-    )
+    return decode_avro_values(raw, value_schema, decoder=decoder)

@@ -59,13 +59,6 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events(spark.read.parquet(f"{sf_dir}/events.parquet"))
 
 
-def events_raw_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
-    """The on-disk events schema (footer probe; needed because streaming
-    reads require an explicit schema and must match the physical type)."""
-    ensure_runtime_confs(spark)
-    return spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-
 #: schema-inference cache for the streaming sources: path ->
 #: (signature, schema), the signature being the file's identity
 #: (mtime, size) — the catalog-metadata cache every real engine keeps

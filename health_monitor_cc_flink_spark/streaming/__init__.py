@@ -1,10 +1,5 @@
 from .watermark import with_default_watermark  # noqa: F401
-from .pipeline import (  # noqa: F401
-    PipelineRun,
-    streaming_windowed_vitals,
-    streaming_enriched_events,
-    run_streaming_pipeline,
-)
+from .pipeline import PipelineRun, run_streaming_pipeline  # noqa: F401
 from .stateful import streaming_detect_anomalies, streaming_forecast  # noqa: F401
 from .sinks import idempotent_parquet_sink  # noqa: F401
 from .materialize import maintain_table, upsert_snapshot  # noqa: F401

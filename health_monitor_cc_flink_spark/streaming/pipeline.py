@@ -1,11 +1,20 @@
-"""Streaming assembly of the health pipeline (SURVEY.md M5):
-file/Kafka stream source → watermarked windowed smoothing → stateful
-anomaly filter → stateful forecast → threshold alerts, with per-stage
-sinks mirroring the reference's per-topic topology (O27, §7.5).
+"""Streaming assembly of the health pipeline (SURVEY.md M5): the
+batch stage builders of plans/health_pipeline.py run as chained
+append-mode streaming queries over a file or Kafka stream source, with
+per-stage parquet sinks mirroring the reference's per-topic topology
+(O27, §7.5).
+
+S3 is `enriched_events` itself: the broadcast join re-reads the static
+patients side per micro-batch (O32).  S4's window is `windowed_vitals`
+over the watermarked events.  Detection and forecast run as the
+stateful operators of streaming/stateful.py, which carry each key's
+AR(1) sums across micro-batches where the batch ML operators need the
+whole history in one frame; S5's filter and S6's threshold apply to
+their outputs.
 
 All stages are append-mode (the reference workload is append-only
-everywhere — SURVEY.md §1.3), so results match the batch plans modulo
-watermark-dropped late rows.
+everywhere — SURVEY.md §1.3), so results match the batch plans on the
+windows the final watermark closed.
 """
 
 from __future__ import annotations
@@ -15,45 +24,9 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..plans.health_pipeline import ALERT_THRESHOLD
+from ..plans.health_pipeline import ALERT_THRESHOLD, enriched_events, windowed_vitals
 from .stateful import streaming_detect_anomalies, streaming_forecast
 from .watermark import with_default_watermark
-
-
-def read_events_file_stream(
-    spark: SparkSession, path: str, schema, ts_col: str = "event_time"
-) -> DataFrame:
-    """File-based stream source (the test/CI stand-in for the Kafka+Avro
-    source in sources/kafka.py; availableNow triggers replay it)."""
-    return spark.readStream.schema(schema).parquet(path)
-
-
-def streaming_enriched_events(events: DataFrame, patients: DataFrame) -> DataFrame:
-    """S3, streaming: stream-static broadcast join (static side re-read
-    per micro-batch under foreachBatch refresh; O32)."""
-    return events.join(F.broadcast(patients), on="patient_id", how="inner")
-
-
-def streaming_windowed_vitals(
-    events: DataFrame,
-    window: str = "1 second",
-    watermark_delay: str | None = None,
-    ts_col: str = "event_time",
-    key_col: str = "patient_id",
-    value_col: str = "vitals.heart_rate",
-) -> DataFrame:
-    """S4's windowed smoothing, streaming: watermark → tumble → avg.
-    Append mode emits once per closed window."""
-    wm = with_default_watermark(events, ts_col, watermark_delay)
-    return (
-        wm.groupBy(F.window(ts_col, window).alias("w"), key_col)
-        .agg(F.avg(value_col).alias("observed_value"))
-        .select(
-            key_col,
-            (F.col("w.end") - F.expr("INTERVAL 1 MILLISECOND")).alias("event_timestamp"),
-            "observed_value",
-        )
-    )
 
 
 class PipelineRun(dict):
@@ -74,12 +47,9 @@ def run_streaming_pipeline(
     schema,
     patients: DataFrame,
     out_dir: str | None = None,
-    window: str = "1 second",
-    min_training_size: int = 30,
-    threshold: float = ALERT_THRESHOLD,
     available_now: bool = True,
     events_stream: DataFrame | None = None,
-) -> dict[str, str]:
+) -> PipelineRun:
     """Run the 4-stage pipeline as chained streaming queries with
     per-stage parquet sinks (faithful topology: each stage's output is a
     named, independently-readable table, like the reference's per-stage
@@ -117,18 +87,18 @@ def run_streaming_pipeline(
     events = (
         events_stream
         if events_stream is not None
-        else read_events_file_stream(spark, events_path, schema)
+        else spark.readStream.schema(schema).parquet(events_path)
     )
 
     # stage 1: enrichment (dead-end branch, reference §2.12.1)
-    sink(streaming_enriched_events(events, patients), "enriched_events")
+    sink(enriched_events(events, patients), "enriched_events")
 
     # stage 2a: windowed smoothing.  Spark allows only one stateful
     # operator per append-mode query, so the smoothing aggregation and
     # the stateful anomaly detector run as separate jobs wired through a
     # materialized table — exactly the reference's statement-per-topic
     # topology (each Flink statement is its own job; SURVEY.md O27).
-    smoothed = streaming_windowed_vitals(events, window=window)
+    smoothed = windowed_vitals(with_default_watermark(events))
     sink(smoothed, "windowed_vitals")
 
     # stage 2b: stateful anomaly detection over the re-sourced stream.
@@ -144,7 +114,6 @@ def run_streaming_pipeline(
         value_col="observed_value",
         ts_col="event_timestamp",
         key_col="patient_id",
-        min_training_size=min_training_size,
     )
     sink(flagged, "enriched_events_flagged")
 
@@ -165,9 +134,8 @@ def run_streaming_pipeline(
         value_col="observed_value",
         ts_col="event_timestamp",
         key_col="key",
-        min_training_size=2,
     )
-    alerts = fc.filter(F.col("forecast_value") < threshold).select(
+    alerts = fc.filter(F.col("forecast_value") < ALERT_THRESHOLD).select(
         F.col("key").alias("patient_id"),
         "event_timestamp",
         "current_value",

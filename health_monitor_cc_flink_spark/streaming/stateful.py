@@ -28,7 +28,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..functions.timeseries import AR1State, _zcrit, anomaly_report, forecast_steps
+from ..functions.timeseries import (
+    CONFIDENCE_PERCENTAGE,
+    HORIZON,
+    MIN_TRAINING_SIZE,
+    AR1State,
+    _zcrit,
+    anomaly_report,
+    forecast_steps,
+)
 
 #: per-key state of the two AR(1) scorers: an AR1State, then the key's
 #: last timestamp (µs)
@@ -71,13 +79,41 @@ def _screen_batch(pdfs, state, ts_col, value_col):
     return batch.sort_values([ts_col, value_col], kind="mergesort")
 
 
+def _ar1_operator(df: DataFrame, key_col, ts_col, value_col, out_schema, score) -> DataFrame:
+    """The one ``applyInPandasWithState`` body of the two AR(1) scorers.
+    Per key and micro-batch: load the carried state, keep the batch rows
+    `_screen_batch` lets through, score them with ``score(k, batch, y,
+    prev, last_ts_us) -> (output pdf, end AR1State)``, and store the end
+    state with the batch's last timestamp.  Append mode, no timeout: a
+    key's state lives as long as the query."""
+
+    def apply(key: Any, pdfs: Iterator, state: GroupState) -> Iterator:
+        (k,) = key
+        prev, last_ts_us = _load_ar1_state(state)
+        batch = _screen_batch(pdfs, state, ts_col, value_col)
+        if batch is None:
+            return
+        y = batch[value_col].to_numpy(dtype=np.float64)
+        out, end = score(k, batch, y, prev, last_ts_us)
+        state.update((*end, int(batch[ts_col].astype("int64").iloc[-1] // 1000)))  # ns → µs
+        yield out
+
+    return df.groupBy(key_col).applyInPandasWithState(
+        apply,
+        outputStructType=out_schema,
+        stateStructType=_AR1_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
 def streaming_detect_anomalies(
     df: DataFrame,
     value_col: str,
     ts_col: str,
     key_col: str,
-    min_training_size: int = 30,
-    confidence_percentage: float = 95.0,
+    min_training_size: int = MIN_TRAINING_SIZE,
+    confidence_percentage: float = CONFIDENCE_PERCENTAGE,
 ) -> DataFrame:
     """Streaming ML_DETECT_ANOMALIES: emits one row per input row with
     flat report fields (is_anomaly, expected_value, lower_bound,
@@ -96,20 +132,13 @@ def streaming_detect_anomalies(
         ]
     )
 
-    def score(key: Any, pdfs: Iterator, state: GroupState) -> Iterator:
+    def score(k, batch, y, prev, _last_ts_us):
         import pandas as pd
 
-        (k,) = key
-        prev, _ = _load_ar1_state(state)
-        batch = _screen_batch(pdfs, state, ts_col, value_col)
-        if batch is None:
-            return
-        y = batch[value_col].to_numpy(dtype=np.float64)
         (is_anom, expected, lower, upper), end = anomaly_report(
             y, z, min_training_size, prev
         )
-        state.update((*end, int(batch[ts_col].astype("int64").iloc[-1] // 1000)))  # ns → µs
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "key": k,
                 "event_timestamp": batch[ts_col].values,
@@ -119,15 +148,9 @@ def streaming_detect_anomalies(
                 "lower_bound": lower,
                 "upper_bound": upper,
             }
-        )
+        ), end
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        score,
-        outputStructType=out_schema,
-        stateStructType=_AR1_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _ar1_operator(df, key_col, ts_col, value_col, out_schema, score)
 
 
 def streaming_forecast(
@@ -135,8 +158,8 @@ def streaming_forecast(
     value_col: str,
     ts_col: str,
     key_col: str,
-    horizon: int = 1,
-    confidence_percentage: float = 95.0,
+    horizon: int = HORIZON,
+    confidence_percentage: float = CONFIDENCE_PERCENTAGE,
     min_training_size: int = 2,
 ) -> DataFrame:
     """Streaming ML_FORECAST: per input row, forecast the next `horizon`
@@ -158,16 +181,10 @@ def streaming_forecast(
         ]
     )
 
-    def forecast(key: Any, pdfs: Iterator, state: GroupState) -> Iterator:
+    def score(k, batch, y, prev, last_ts_us):
         import pandas as pd
 
-        (k,) = key
-        prev, last_ts_us = _load_ar1_state(state)
-        batch = _screen_batch(pdfs, state, ts_col, value_col)
-        if batch is None:
-            return
         ts_us = (batch[ts_col].astype("int64") // 1000).tolist()  # ns → µs
-        y = batch[value_col].to_numpy(dtype=np.float64)
         known = ([last_ts_us] if last_ts_us is not None else []) + ts_us[-2:]
         step_us = known[-1] - known[-2] if len(known) >= 2 else 1_000_000
         if step_us <= 0:
@@ -188,16 +205,9 @@ def streaming_forecast(
             for t, v, per_point in zip(ts_us, y, steps)
             for h, f, lo, hi, rm, ai in per_point
         ]
-        state.update((*end, ts_us[-1]))
-        yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+        return pd.DataFrame(rows, columns=[f.name for f in out_schema.fields]), end
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        forecast,
-        outputStructType=out_schema,
-        stateStructType=_AR1_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _ar1_operator(df, key_col, ts_col, value_col, out_schema, score)
 
 
 def streaming_rate_limit_first_n(

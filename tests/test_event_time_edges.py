@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from health_monitor_cc_flink_spark.operators.relational import tumble
 from health_monitor_cc_flink_spark.plans.health_pipeline import windowed_vitals
-from health_monitor_cc_flink_spark.streaming import streaming_windowed_vitals
+from health_monitor_cc_flink_spark.streaming import with_default_watermark
 
 BASE = datetime.datetime(2026, 1, 1, 0, 0, 0)
 
@@ -66,7 +66,7 @@ def test_streaming_drops_late_events_beyond_watermark(spark, tmp_path):
     def run_once():
         stream = spark.readStream.schema(HEALTH_EVENT_SCHEMA).parquet(path)
         (
-            streaming_windowed_vitals(stream, window="1 second", watermark_delay="10 seconds")
+            windowed_vitals(with_default_watermark(stream, delay="10 seconds"))
             .writeStream.outputMode("append")
             .format("parquet")
             .option("path", out)

@@ -53,7 +53,8 @@ def test_streaming_with_rocksdb_state_store(spark, tmp_path):
     per-key state off-heap/on-disk instead of in executor memory."""
     from health_monitor_cc_flink_spark.fixtures import health_events_df
     from health_monitor_cc_flink_spark.schemas import HEALTH_EVENT_SCHEMA
-    from health_monitor_cc_flink_spark.streaming import streaming_windowed_vitals
+    from health_monitor_cc_flink_spark.plans.health_pipeline import windowed_vitals
+    from health_monitor_cc_flink_spark.streaming import with_default_watermark
 
     events_path = str(tmp_path / "ev")
     health_events_df(spark, n_ticks=120, interval_s=0.5, seed=7).write.parquet(events_path)
@@ -67,7 +68,7 @@ def test_streaming_with_rocksdb_state_store(spark, tmp_path):
         stream = spark.readStream.schema(HEALTH_EVENT_SCHEMA).parquet(events_path)
         out = str(tmp_path / "out")
         (
-            streaming_windowed_vitals(stream)
+            windowed_vitals(with_default_watermark(stream))
             .writeStream.outputMode("append")
             .format("parquet")
             .option("path", out)

@@ -96,7 +96,7 @@ def test_native_stream_windowed_agg_equals_batch(spark, tmp_path):
     import time
 
     from health_monitor_cc_flink_spark.plans.health_pipeline import windowed_vitals
-    from health_monitor_cc_flink_spark.streaming import streaming_windowed_vitals
+    from health_monitor_cc_flink_spark.streaming import with_default_watermark
 
     batch_events = spark.read.format("health_simulator").option("n_ticks", "480").load()
     cutoff = batch_events.agg(
@@ -119,7 +119,7 @@ def test_native_stream_windowed_agg_equals_batch(spark, tmp_path):
     )
     out = str(tmp_path / "wv")
     q = (
-        streaming_windowed_vitals(stream)
+        windowed_vitals(with_default_watermark(stream))
         .writeStream.outputMode("append")
         .format("parquet")
         .option("path", out)

@@ -4,6 +4,7 @@ match the batch plan (modulo watermark-dropped late rows), and the
 end-to-end streaming pipeline must reproduce the golden bradycardia
 signal."""
 
+import datetime
 import glob
 import os
 
@@ -15,14 +16,17 @@ from health_monitor_cc_flink_spark.functions.timeseries import (
     ml_detect_anomalies,
     ml_forecast,
 )
-from health_monitor_cc_flink_spark.plans.health_pipeline import windowed_vitals
+from health_monitor_cc_flink_spark.plans.health_pipeline import (
+    enriched_events,
+    run_pipeline,
+    windowed_vitals,
+)
 from health_monitor_cc_flink_spark.schemas import HEALTH_EVENT_SCHEMA
 from health_monitor_cc_flink_spark.sources.memory import patients_df
 from health_monitor_cc_flink_spark.streaming import (
     run_streaming_pipeline,
     streaming_detect_anomalies,
     streaming_forecast,
-    streaming_windowed_vitals,
     with_default_watermark,
 )
 
@@ -162,7 +166,7 @@ def test_streaming_window_agg_equals_batch(spark, events_path, tmp_path):
     stream = spark.readStream.schema(HEALTH_EVENT_SCHEMA).parquet(events_path)
     out = str(tmp_path / "wv")
     (
-        streaming_windowed_vitals(stream)
+        windowed_vitals(with_default_watermark(stream))
         .writeStream.outputMode("append")
         .format("parquet")
         .option("path", out)
@@ -177,11 +181,12 @@ def test_streaming_window_agg_equals_batch(spark, events_path, tmp_path):
 
 
 def test_streaming_pipeline_golden_bradycardia(spark, events_path, tmp_path):
+    patients = patients_df(spark)
     paths = run_streaming_pipeline(
         spark,
         events_path,
         HEALTH_EVENT_SCHEMA,
-        patients_df(spark),
+        patients,
         out_dir=str(tmp_path / "pipe"),
     )
     assert set(paths) == {
@@ -205,13 +210,38 @@ def test_streaming_pipeline_golden_bradycardia(spark, events_path, tmp_path):
     assert alert_patients == {1}
     assert alerts.filter(F.col("forecast_value") >= 40).count() == 0
 
+    # S3 is the batch stage itself: same columns, in the same order
+    batch_events = spark.read.parquet(events_path)
+    assert enriched.schema.fieldNames() == enriched_events(
+        batch_events, patients
+    ).schema.fieldNames()
+
+    # the alerts equal batch S3-S6 on every window the windowing query's
+    # final watermark closed (a window closes once its end, event_timestamp
+    # + 1 ms, is at or below the watermark)
+    wm = paths.queries["windowed_vitals"].recentProgress[-1].eventTime["watermark"]
+    cutoff = (
+        datetime.datetime.fromisoformat(wm.replace("Z", "+00:00"))
+        .astimezone()
+        .replace(tzinfo=None)
+    )
+
+    def rows(df):
+        return sorted((int(r[0]), *r[1:]) for r in map(tuple, df.collect()))
+
+    expected = [
+        r
+        for r in rows(run_pipeline(batch_events, patients)["heartbeat_alerts"])
+        if r[1] < cutoff
+    ]
+    assert expected
+    assert rows(alerts) == expected
+
 
 def test_stream_static_dim_refresh_via_foreachbatch(spark, tmp_path):
     """O32 freshness: with foreachBatch re-reading the dimension from
     disk, a dimension update between micro-batches is visible to later
     batches (the stream-static refresh pattern)."""
-    import datetime
-
     from health_monitor_cc_flink_spark.schemas import PATIENTS_SCHEMA
 
     base = datetime.datetime(2026, 6, 1)
