@@ -76,16 +76,20 @@ def decode_avro_values(
     This is the decode stage of the O1 source, split out so it can be
     exercised on recorded Avro-framed bytes without a broker.  The
     Confluent wire-format strip (magic 0x00 + 4-byte schema id) happens
-    as a Catalyst expression either way.
+    as a Catalyst expression either way, and it checks the magic byte:
+    a non-null value whose first byte is not 0x00 fails the query with
+    "bad Confluent wire-format magic: 0x..", as
+    `avro_codec.strip_confluent_frame` does, instead of decoding bytes
+    6.. as an event.
 
     decoder="jvm"     → spark-avro `from_avro` (vectorized; production).
     decoder="python"  → `mapInArrow` over the schema-compiled decoder
                         (`sources.avro_codec.decode_record`), compiled
                         once and cached per Python worker process; each
                         Arrow batch's payloads decode straight into one
-                        Arrow array per value field — the env-gated
-                        fallback for clusters without the spark-avro
-                        module, and the path integration tests use.
+                        Arrow array per value field.  Callers choose it
+                        on clusters without the spark-avro module; the
+                        integration tests and the benchmark use it.
 
     On a batch input the python decoder's result is a lazy local
     checkpoint: the first action decodes the topic once and stores the
@@ -97,8 +101,13 @@ def decode_avro_values(
     uncheckpointed, as is the jvm decoder's plan.
     """
     schema_json = avro_schema_json(value_schema)
-    # strip magic byte (1) + schema id (4) of the SR wire format
-    value = F.expr("substring(value, 6, length(value) - 5)")
+    # strip magic byte (1) + schema id (4) of the SR wire format; a
+    # wrong magic raises (a NULL value stays NULL)
+    value = F.expr(
+        "CASE WHEN substring(value, 1, 1) <> X'00' THEN raise_error(concat("
+        "'bad Confluent wire-format magic: 0x', hex(substring(value, 1, 1))))"
+        " ELSE substring(value, 6, length(value) - 5) END"
+    )
 
     if decoder == "jvm":
         try:

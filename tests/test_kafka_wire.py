@@ -290,6 +290,16 @@ def test_batch_decode_truncated_payload_fails_the_job(spark):
         decode_avro_values(records, VALUE_SCHEMA, decoder="python").count()
 
 
+def test_batch_decode_rejects_bad_wire_format_magic(spark):
+    """The wire-format strip checks the magic byte: a valid event framed
+    with magic 0x01 fails the decode, naming the bad magic, instead of
+    decoding bytes 6.. as an event."""
+    framed = b"\x01" + confluent_frame(encode_record(SCHEMA_JSON, SAMPLE), 7)[1:]
+    records = spark.createDataFrame([(bytearray(framed), dt.datetime(2026, 1, 1))], KAFKA_SHAPE)
+    with pytest.raises(Exception, match="bad Confluent wire-format magic: 0x01"):
+        decode_avro_values(records, VALUE_SCHEMA, decoder="python").collect()
+
+
 # ---------------------------------------------------------------------------
 # read_kafka_avro_stream option/offset handling via the DataSource API
 # (the piece the recorded-bytes path above cannot reach: no broker in the
