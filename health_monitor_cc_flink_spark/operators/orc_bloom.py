@@ -294,10 +294,6 @@ def read_column_blooms(data: bytes, stripe: dict, codec: str,
         f"column {column_id} has no BLOOM_FILTER_UTF8 stream")
 
 
-def _zz_dec(v: int) -> int:
-    return (v >> 1) ^ -(v & 1)
-
-
 def read_column_row_index(data: bytes, stripe: dict, codec: str,
                           column_id: int) -> list[dict]:
     """Parse ``column_id``'s ROW_INDEX stream from one stripe's

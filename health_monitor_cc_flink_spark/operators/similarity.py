@@ -332,7 +332,6 @@ def hyperplane_lsh_bucket(
     vec_col: str,
     n_bits: int = 16,
     dim: int = 64,
-    carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Random-hyperplane LSH signature per vector (SimHash for cosine
     space): bit j = sign(⟨v, h_j⟩) where hyperplane h_j has deterministic
@@ -349,11 +348,7 @@ def hyperplane_lsh_bucket(
     layout as the persisted IVF index).
     """
     bucket = hyperplane_bucket_expr(vec_col, n_bits=n_bits, dim=dim)
-    return df.select(
-        F.col(id_col),
-        *[F.col(c) for c in carry_cols],
-        F.expr(bucket).alias(f"bucket{n_bits}"),
-    )
+    return df.select(F.col(id_col), F.expr(bucket).alias(f"bucket{n_bits}"))
 
 
 def norm2_milli(

@@ -101,24 +101,6 @@ FORECAST_ROW_SCHEMA = T.StructType(
 )
 
 # --- driver testdata schemas (FIXTURES.md §B) --------------------------------
-# LEGACY events encoding: `ts` as int64 epoch-nanos (parquet
-# TIMESTAMP(NANOS) under spark.sql.legacy.parquet.nanosAsLong=true).
-# Newer driver testdata ships `ts` as timestamp[us]; production readers
-# must go through sources.testdata (normalize_events / events_stream),
-# which probes the footer and adapts.  This schema remains only for
-# tests that write their own nanos-encoded fixtures.
-
-TESTDATA_EVENTS_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.LongType()),  # epoch nanos
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),  # JSON text
-    ]
-)
-
 TESTDATA_TABLES = (
     "region",
     "nation",

@@ -93,11 +93,13 @@ def run_streaming_pipeline(
     # stage 1: enrichment (dead-end branch, reference §2.12.1)
     sink(enriched_events(events, patients), "enriched_events")
 
-    # stage 2a: windowed smoothing.  Spark allows only one stateful
-    # operator per append-mode query, so the smoothing aggregation and
-    # the stateful anomaly detector run as separate jobs wired through a
-    # materialized table — exactly the reference's statement-per-topic
-    # topology (each Flink statement is its own job; SURVEY.md O27).
+    # stage 2a: windowed smoothing.  Spark rejects applyInPandasWithState
+    # in append mode after an aggregation, so the smoothing aggregation
+    # and the applyInPandasWithState anomaly detector run as separate jobs
+    # wired through a materialized table, as in the reference's
+    # statement-per-topic topology (each Flink statement is its own job;
+    # SURVEY.md O27).  transformWithStateInPandas may follow the window
+    # aggregation in one query; that is the route to fusing S4-S6.
     smoothed = windowed_vitals(with_default_watermark(events))
     sink(smoothed, "windowed_vitals")
 

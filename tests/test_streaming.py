@@ -7,9 +7,12 @@ signal."""
 import datetime
 import glob
 import os
+import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from health_monitor_cc_flink_spark.fixtures import health_events_df
 from health_monitor_cc_flink_spark.functions.timeseries import (
@@ -74,6 +77,43 @@ def _drain(spark, frame, name):
     )
     q.awaitTermination()
     return sorted(map(tuple, spark.table(name).collect()))
+
+
+SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+    ]
+)
+
+BASE = 1_767_225_600  # 2026-01-01T00:00:00Z epoch seconds
+
+
+def _write_batch(spark, spec, out_dir, name, mtime):
+    """spec: list of (user_id, event_type, t_offset_s).  One parquet
+    file named so the file source sees increasing modification times."""
+    data = [
+        (i, uid, et, (BASE + off) * 1_000_000)
+        for i, (uid, et, off) in enumerate(spec)
+    ]
+    df = (
+        spark.createDataFrame(
+            data, "event_id long, user_id long, event_type string, ts_us long"
+        )
+        .withColumn("ts", F.timestamp_micros("ts_us"))
+        .select("event_id", "ts", "user_id", "event_type")
+        .coalesce(1)
+    )
+    tmp = out_dir + f"_tmp_{name}"
+    df.write.mode("overwrite").parquet(tmp)
+    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+    os.makedirs(out_dir, exist_ok=True)
+    dst = os.path.join(out_dir, f"{name}.parquet")
+    shutil.copyfile(os.path.join(tmp, part), dst)
+    os.utime(dst, (mtime, mtime))
+    shutil.rmtree(tmp)
 
 
 @pytest.mark.parametrize("n_files", [1, 12])
@@ -447,3 +487,54 @@ def test_streaming_forecast_constant_history_emits_null_aic(spark, tmp_path):
     for r in rows:
         assert r.aic is None or math.isfinite(r.aic), f"NaN leaked into aic: {r}"
     assert any(r.aic is None for r in rows), "sse=0 rows must have NULL aic"
+
+
+def test_streaming_anomalies_drop_below_watermark_rows(spark, tmp_path):
+    """A row arriving below the watermark must be dropped by the
+    streaming scorer, not appended out-of-event-order into the AR
+    history: the emitted set contains only the in-watermark rows, and
+    the late row produces no output row."""
+    from health_monitor_cc_flink_spark.streaming.stateful import (
+        streaming_detect_anomalies,
+    )
+
+    src = str(tmp_path / "anom_src")
+    now = time.time()
+    # batch a: 40 in-order points for key 1 (offsets 0..39 s)
+    _write_batch(spark, [(1, "v", i) for i in range(40)], src, "a", now - 400)
+    # batch b: far-future row pushes the watermark past batch a
+    _write_batch(spark, [(1, "v", 100_000)], src, "b", now - 300)
+    # batch c: LATE row (below the watermark now at 100_000 - 3600)
+    _write_batch(spark, [(1, "v", 50)], src, "c", now - 200)
+
+    stream = (
+        spark.readStream.schema(SCHEMA)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+        .withWatermark("ts", "1 hour")
+    )
+    # score event_id as the value column (deterministic integers)
+    flagged = streaming_detect_anomalies(
+        stream.withColumn("value", F.col("event_id").cast("double")),
+        value_col="value",
+        ts_col="ts",
+        key_col="user_id",
+        min_training_size=30,
+    )
+    out_dir = str(tmp_path / "anom_out")
+    (
+        flagged.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", str(tmp_path / "anom_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    got_ts = sorted(
+        r.event_timestamp.timestamp() - BASE
+        for r in spark.read.parquet(out_dir).collect()
+    )
+    # 40 batch-a rows + the future sentinel row; the late offset-50 row
+    # must NOT appear (and must not have corrupted the history order)
+    assert got_ts == [float(i) for i in range(40)] + [100_000.0]
