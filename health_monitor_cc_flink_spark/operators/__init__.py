@@ -14,4 +14,4 @@ from .relational import (  # noqa: F401
     session,
     cumulate,
 )
-from . import dedup, multimodal, quality, similarity, sketches, skew, text  # noqa: F401
+from . import dedup, multimodal, similarity, sketches, skew, text  # noqa: F401

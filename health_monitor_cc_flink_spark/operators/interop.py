@@ -219,96 +219,3 @@ def iceberg_to_delta(iceberg_files: dict[str, bytes], *,
         actions.append({"add": add})
     out.update(build_delta_log({0: actions}))
     return out
-
-
-def hudi_to_iceberg(hudi_files: dict[str, bytes], *,
-                    snapshot_id: int = 1) -> dict[str, bytes]:
-    """Hudi COPY-ON-WRITE timeline -> Iceberg snapshot over the
-    same base files (XTable's third leg).  Record counts come from
-    the write stats' numWrites; the partition path becomes the
-    partition tuple's ``lang`` when it is a ``lang=...`` segment
-    (the synth's hive-style layout), else null.  MERGE-ON-READ
-    tables with un-compacted log files REFUSE — their row state is
-    not representable as a file census without running the log
-    merge (compact first, then translate; a silent translation
-    would resurrect deleted rows)."""
-    from ..sources.avro_ocf import write_ocf
-
-    from .hudi import reconstruct_mor_table, reconstruct_table
-
-    mor = reconstruct_mor_table(hudi_files)
-    if any(g["log_paths"] for g in mor["live"].values()):
-        raise ValueError(
-            "hudi MOR table has un-compacted log files; compact "
-            "before translating (a base-file census would miss "
-            "their updates/deletes)")
-    snap = reconstruct_table(hudi_files)
-    entries = []
-    for (part, _fid), g in sorted(snap["live"].items()):
-        if g.get("num_writes") is None:
-            raise ValueError(
-                "hudi write stat without numWrites cannot "
-                "translate (iceberg manifests require "
-                "record_count)")
-        lang = (part.split("=", 1)[1]
-                if part.startswith("lang=") else None)
-        entries.append({
-            "status": STATUS_ADDED, "snapshot_id": snapshot_id,
-            "sequence_number": None,
-            "data_file": {
-                "content": CONTENT_DATA,
-                "file_path": g["path"],
-                "file_format": "PARQUET",
-                "partition": {"lang": lang},
-                "record_count": g["num_writes"],
-                "file_size_in_bytes": 0,
-                "equality_ids": None}})
-    mpath = "metadata/manifest-xtable-hudi.avro"
-    mblob = write_ocf(MANIFEST_ENTRY_SCHEMA_V2, entries,
-                      codec="deflate", sync_seed=snapshot_id)
-    return {
-        mpath: mblob,
-        f"metadata/snap-{snapshot_id}.avro": write_ocf(
-            MANIFEST_LIST_SCHEMA_V2, [{
-                "manifest_path": mpath,
-                "manifest_length": len(mblob),
-                "partition_spec_id": 0, "content": CONTENT_DATA,
-                "sequence_number": 1,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-            }], codec="deflate", sync_seed=snapshot_id + 1000),
-    }
-
-
-def iceberg_to_hudi(iceberg_files: dict[str, bytes], *,
-                    snapshot_id: int = 1,
-                    instant_time: str = "20260817000001") -> \
-        dict[str, bytes]:
-    """Iceberg snapshot -> Hudi COW timeline: one commit whose
-    write stats register every live data file (fileId derived from
-    the file name, numWrites from record_count, partition from the
-    tuple).  Snapshots carrying deletes refuse — Hudi has no
-    side-file delete representation to land them in; apply them
-    (rewrite or MOR logs) before translating."""
-    from .hudi import build_commit
-
-    snap = walk_snapshot_v2(iceberg_files,
-                            snapshot_id=snapshot_id)
-    if any(f["n_deleted"] for f in snap["live"]):
-        raise ValueError(
-            "iceberg snapshot carries deletes; a hudi COW "
-            "translation would resurrect deleted rows — apply "
-            "them first")
-    stats: dict[str, list] = {}
-    for f in sorted(snap["live"], key=lambda f: f["file_path"]):
-        part = (f"lang={f['lang']}" if f.get("lang") else ".")
-        fname = f["file_path"].rsplit("/", 1)[-1]
-        stats.setdefault(part, []).append({
-            "fileId": fname.rsplit(".", 1)[0],
-            "path": f["file_path"],
-            "numWrites": f["record_count"],
-            "totalWriteBytes": f["file_size_in_bytes"],
-        })
-    return {f".hoodie/{instant_time}.commit": build_commit(stats)}

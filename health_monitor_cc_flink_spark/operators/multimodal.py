@@ -1237,88 +1237,6 @@ def synth_wav_tone_payload(df: DataFrame, id_col: str = "doc_id",
     return src.mapInPandas(gen, schema="doc_id long, wav binary")
 
 
-def synth_aiff_tone_payload(df: DataFrame, id_col: str = "doc_id",
-                            len_col: str = "n_chars") -> DataFrame:
-    """Attach an ``aiff`` column: the SAME square-wave tone family as
-    synth_wav_tone_payload, but framed as big-endian AIFF with the
-    80-bit extended-float sample rate — so the closed-form oracle also
-    pins the f80 and big-endian-PCM paths."""
-    from .aiff import encode_aiff
-
-    src = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        (F.lit(500) + F.col(id_col) % 1000).cast("int").alias("amp"),
-        (F.lit(25) * (F.col(id_col) % 4 + 1)).cast("int").alias("half"),
-        (F.col(len_col) + 1000).cast("int").alias("n"),
-        (F.lit(8000) * (F.col(id_col) % 5 + 1)).cast("int").alias("sr"),
-    )
-
-    def gen(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            aiffs = []
-            for amp, half, n, sr in zip(pdf["amp"], pdf["half"],
-                                        pdf["n"], pdf["sr"]):
-                t = np.arange(int(n))
-                pcm = np.where(
-                    (t // int(half)) % 2 == 0, int(amp), -int(amp)
-                ).astype(np.int16)
-                aiffs.append(encode_aiff(pcm, int(sr)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "aiff": aiffs})
-
-    return src.mapInPandas(gen, schema="doc_id long, aiff binary")
-
-
-def aiff_pcm_decode_features(df: DataFrame, payload_col: str = "aiff",
-                             id_col: str = "doc_id") -> DataFrame:
-    """AIFF decode -> exact-integer signal features (mirrors
-    wav_pcm_decode_features: energy, zero crossings, extremes) plus
-    the sample rate recovered through the 80-bit extended float."""
-    from .aiff import decode_aiff
-
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
-
-    def feats(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        cols = ("channels", "sample_rate", "n_samples", "sumsq",
-                "zero_crossings", "amp_min", "amp_max")
-        for pdf in batches:
-            out = {"doc_id": [], "ok": [], **{c: [] for c in cols}}
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                try:
-                    s, rate, _ = decode_aiff(bytes(p))
-                except (ValueError, NotImplementedError):
-                    out["doc_id"].append(doc_id)
-                    out["ok"].append(False)
-                    for c in cols:
-                        out[c].append(None)
-                    continue
-                mono = s[:, 0].astype(np.int64)
-                out["doc_id"].append(doc_id)
-                out["ok"].append(True)
-                out["channels"].append(s.shape[1])
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(s.shape[0])
-                out["sumsq"].append(int((mono * mono).sum()))
-                out["zero_crossings"].append(
-                    int((np.signbit(mono[1:]) != np.signbit(mono[:-1])).sum())
-                )
-                out["amp_min"].append(int(mono.min()))
-                out["amp_max"].append(int(mono.max()))
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(
-        feats,
-        schema=("doc_id long, ok boolean, channels long, "
-                "sample_rate long, n_samples long, sumsq long, "
-                "zero_crossings long, amp_min long, amp_max long"),
-    )
-
-
 def wav_pcm_decode_features(df: DataFrame, payload_col: str = "wav",
                             id_col: str = "doc_id") -> DataFrame:
     """REAL audio decode over Arrow batches: open each payload with the
@@ -2242,13 +2160,12 @@ def synth_jpeg_exif_payload(df: DataFrame, id_col: str = "doc_id",
 
 def jpeg_exif_metadata(df: DataFrame, payload_col: str = "jpeg",
                        id_col: str = "doc_id") -> DataFrame:
-    """EXIF harvesting over Arrow batches — the image-corpus analog of
-    the MP3 ID3 triage: walk the JPEG segment stream for an APP1 EXIF
-    block, parse its TIFF IFDs (0th + Exif sub-IFD, either byte
-    order), and surface the camera fields.  Images without EXIF get
-    has_exif = false with NULL fields; corrupt streams flag ok =
-    false.  No pixel decode happens — metadata-bound, like the MP3
-    walk."""
+    """EXIF harvesting over Arrow batches: walk the JPEG segment
+    stream for an APP1 EXIF block, parse its TIFF IFDs (0th + Exif
+    sub-IFD, either byte order), and surface the camera fields.
+    Images without EXIF get has_exif = false with NULL fields; corrupt
+    streams flag ok = false.  No pixel decode happens — the walk is
+    metadata-bound."""
     from .jpeg import extract_exif_app1
     from .tiff import parse_exif
 
@@ -3931,15 +3848,6 @@ def pdf_text_features(df: DataFrame, payload_col: str = "pdf",
     )
 
 
-# -----------------------------------------------------------------------------
-# FLAC — compressed LOSSLESS audio (operators/flac.py, RFC 9639 subset).
-# Losslessness makes the gate trivial compared to the image codecs:
-# any deterministic synthetic waveform decodes back bit-exactly, so the
-# oracle is the waveform formula itself; CRC-8/16 + md5 give the codec
-# a spec-native corrupt-payload story.
-# -----------------------------------------------------------------------------
-
-
 def synth_warc_payload(df: DataFrame, id_col: str = "doc_id",
                        len_col: str = "n_chars") -> DataFrame:
     """Attach a ``warc`` column of COMPLETE Common-Crawl-style WARC
@@ -4121,85 +4029,6 @@ def warc_charset_extract(df: DataFrame, payload_col: str = "warc",
         extract,
         schema=("doc_id long, ok boolean, page long, charset string, "
                 "text string, n_words long"),
-    )
-
-
-def synth_mp3_payload(df: DataFrame, id_col: str = "doc_id",
-                      len_col: str = "n_chars") -> DataFrame:
-    """Attach an ``mp3`` column of structurally-valid MP3 files:
-    ID3v2.3 tag (TIT2='title <doc_id>', TPE1='artist <doc_id%50>')
-    followed by n_chars%40+20 CBR MPEG-1 Layer III frames at bitrate
-    [64,128,192,320][doc_id%4] kbps / sample rate
-    [44100,48000,32000][doc_id%3] — every metadata field closed-form."""
-    from .mp3 import encode_mp3_stub
-
-    src = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        (F.col(len_col) % 40 + 20).cast("int").alias("n"),
-    )
-    kbps_cycle = (64, 128, 192, 320)
-    sr_cycle = (44100, 48000, 32000)
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            mp3s = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                d = int(doc_id)
-                mp3s.append(
-                    encode_mp3_stub(
-                        f"title {d}",
-                        f"artist {d % 50}",
-                        int(n),
-                        kbps_cycle[d % 4],
-                        sr_cycle[d % 3],
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "mp3": mp3s})
-
-    return src.mapInPandas(gen, schema="doc_id long, mp3 binary")
-
-
-def mp3_metadata_features(df: DataFrame, payload_col: str = "mp3",
-                          id_col: str = "doc_id") -> DataFrame:
-    """Audio-corpus metadata triage over Arrow batches: ID3v2 text
-    frames + MPEG frame walk (count, bitrate, sample rate, CBR
-    duration) WITHOUT audio decode.  Corrupt payloads flag their row
-    (ok=false)."""
-    from .mp3 import mp3_metadata
-
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
-
-    def feats(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        cols = ("title", "artist", "n_frames", "bitrate_kbps",
-                "sample_rate", "audio_bytes", "duration_ms")
-        for pdf in batches:
-            out = {"doc_id": [], "ok": [], **{c: [] for c in cols}}
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                try:
-                    meta = mp3_metadata(bytes(p))
-                except (ValueError, NotImplementedError):
-                    out["doc_id"].append(doc_id)
-                    out["ok"].append(False)
-                    for c in cols:
-                        out[c].append(None)
-                    continue
-                out["doc_id"].append(doc_id)
-                out["ok"].append(True)
-                for c in cols:
-                    out[c].append(meta[c])
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(
-        feats,
-        schema=(
-            "doc_id long, ok boolean, title string, artist string, "
-            "n_frames long, bitrate_kbps long, sample_rate long, "
-            "audio_bytes long, duration_ms long"
-        ),
     )
 
 
@@ -4389,90 +4218,6 @@ def archive_members_extract(df: DataFrame, payload_col: str = "archive",
     )
 
 
-def synth_g711_payload(df: DataFrame, id_col: str = "doc_id",
-                       len_col: str = "n_chars") -> DataFrame:
-    """Attach a ``wav`` column of COMPLETE G.711 WAV files (format tag
-    7 mu-law for even doc_ids, 6 A-law for odd): companded wire bytes
-    b_i = (doc_id*13 + 7i) % 256, n = n_chars + 800 samples, mono,
-    sr = 8000*(doc_id%2+1).  The companded->linear map is exact
-    integer arithmetic, so the decoded-sample statistics are
-    closed-form from the byte formula."""
-    from .g711 import encode_g711_wav
-
-    src = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        (F.col(len_col) + 800).cast("int").alias("n"),
-        (F.lit(8000) * (F.col(id_col) % 2 + 1)).cast("int").alias("sr"),
-    )
-
-    def gen(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            wavs = []
-            for doc_id, n, sr in zip(pdf["doc_id"], pdf["n"], pdf["sr"]):
-                d = int(doc_id)
-                i = np.arange(int(n), dtype=np.int64)
-                comp = ((d * 13 + 7 * i) % 256).astype(np.uint8)
-                wavs.append(
-                    encode_g711_wav(
-                        comp, int(sr), "ulaw" if d % 2 == 0 else "alaw"
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "wav": wavs})
-
-    return src.mapInPandas(gen, schema="doc_id long, wav binary")
-
-
-def g711_decode_features(df: DataFrame, payload_col: str = "wav",
-                         id_col: str = "doc_id") -> DataFrame:
-    """REAL G.711 decode over Arrow batches (RIFF parse + exact
-    companding inverse) reduced to integer-exact linear-sample
-    statistics.  Corrupt payloads flag their row (ok=false)."""
-    from .g711 import decode_g711_wav
-
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
-
-    def feats(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        cols = ("law", "sample_rate", "n_samples", "s_sum", "s_min",
-                "s_max", "energy")
-        for pdf in batches:
-            out = {"doc_id": [], "ok": [], **{c: [] for c in cols}}
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                try:
-                    lin, sr, law = decode_g711_wav(bytes(p))
-                except (ValueError, NotImplementedError):
-                    out["doc_id"].append(doc_id)
-                    out["ok"].append(False)
-                    for c in cols:
-                        out[c].append(None)
-                    continue
-                s = lin.reshape(-1).astype(np.int64)
-                out["doc_id"].append(doc_id)
-                out["ok"].append(True)
-                out["law"].append(law)
-                out["sample_rate"].append(int(sr))
-                out["n_samples"].append(int(s.size))
-                out["s_sum"].append(int(s.sum()))
-                out["s_min"].append(int(s.min()))
-                out["s_max"].append(int(s.max()))
-                out["energy"].append(int((s * s).sum()))
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(
-        feats,
-        schema=(
-            "doc_id long, ok boolean, law string, sample_rate long, "
-            "n_samples long, s_sum long, s_min long, s_max long, "
-            "energy long"
-        ),
-    )
-
-
 def synth_gif_payload(df: DataFrame, id_col: str = "doc_id",
                       len_col: str = "n_chars") -> DataFrame:
     """Attach a ``gif`` column of COMPLETE animated GIF89a files: two
@@ -4639,174 +4384,6 @@ def webp_decode_features(df: DataFrame, payload_col: str = "webp",
         schema=(
             "doc_id long, ok boolean, width long, height long, "
             "r_sum long, g_sum long, b_sum long, a_min long, rgb_max long"
-        ),
-    )
-
-
-def synth_flac_payload(df: DataFrame, id_col: str = "doc_id",
-                       len_col: str = "n_chars") -> DataFrame:
-    """Attach a ``flac`` column of COMPLETE FLAC files: mono 16-bit
-    sawtooth s[i] = ((doc_id*31 + 7*i) mod 2048) - 1024 with
-    n = n_chars + 500 samples at 8000*(doc_id%4+1) Hz — a predictable
-    signal the FIXED predictors genuinely compress (~2.7x)."""
-    from .flac import encode_flac
-
-    src = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        (F.col(len_col) + 500).cast("int").alias("n"),
-        (F.lit(8000) * (F.col(id_col) % 4 + 1)).cast("int").alias("sr"),
-    )
-
-    def gen(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            flacs = []
-            for doc_id, n, sr in zip(pdf["doc_id"], pdf["n"], pdf["sr"]):
-                i = np.arange(int(n), dtype=np.int64)
-                s = ((int(doc_id) * 31 + 7 * i) % 2048 - 1024).astype(np.int16)
-                flacs.append(encode_flac(s, int(sr)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "flac": flacs})
-
-    return src.mapInPandas(gen, schema="doc_id long, flac binary")
-
-
-def synth_flac_stereo_payload(df: DataFrame, id_col: str = "doc_id",
-                              len_col: str = "n_chars") -> DataFrame:
-    """Attach a ``flac`` column of COMPLETE stereo FLAC files that
-    exercise the decoder's LPC + stereo-decorrelation surface: every
-    subframe is forced LPC (the subframe type real encoders emit), and
-    the channel assignment cycles indep/left-side/right-side/mid-side
-    by doc_id%4, so one hash covers all four reconstructions.
-    Channels are integer sawtooths L[i] = ((doc_id*31+7i) mod 2048)-1024,
-    R[i] = ((doc_id*17+5i) mod 1024)-512 — lossless, so the oracle is
-    the waveform formula."""
-    from .flac import encode_flac
-
-    src = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        (F.col(len_col) + 500).cast("int").alias("n"),
-        (F.lit(8000) * (F.col(id_col) % 4 + 1)).cast("int").alias("sr"),
-    )
-    modes = ("indep", "ls", "rs", "ms")
-
-    def gen(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            flacs = []
-            for doc_id, n, sr in zip(pdf["doc_id"], pdf["n"], pdf["sr"]):
-                i = np.arange(int(n), dtype=np.int64)
-                left = (int(doc_id) * 31 + 7 * i) % 2048 - 1024
-                right = (int(doc_id) * 17 + 5 * i) % 1024 - 512
-                s = np.stack([left, right], axis=1).astype(np.int16)
-                flacs.append(
-                    encode_flac(
-                        s,
-                        int(sr),
-                        stereo_mode=modes[int(doc_id) % 4],
-                        force_lpc=True,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "flac": flacs})
-
-    return src.mapInPandas(gen, schema="doc_id long, flac binary")
-
-
-def flac_stereo_decode_features(df: DataFrame, payload_col: str = "flac",
-                                id_col: str = "doc_id") -> DataFrame:
-    """Stereo twin of :func:`flac_decode_features`: full decode (LPC
-    subframes, all four channel assignments, CRC-8/16 + md5 verified)
-    reduced to integer-exact per-channel statistics.  Corrupt payloads
-    flag their row (ok=false)."""
-    from .flac import decode_flac
-
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
-
-    def feats(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        cols = ("n_samples", "sample_rate", "l_sum", "l_min", "l_max",
-                "r_sum", "r_min", "r_max")
-        for pdf in batches:
-            out = {"doc_id": [], "ok": [], **{c: [] for c in cols}}
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                try:
-                    s, sr = decode_flac(bytes(p), verify=True)
-                    if s.ndim != 2 or s.shape[1] != 2:
-                        raise ValueError("expected a stereo stream")
-                except (ValueError, NotImplementedError):
-                    out["doc_id"].append(doc_id)
-                    out["ok"].append(False)
-                    for c in cols:
-                        out[c].append(None)
-                    continue
-                left, right = s[:, 0], s[:, 1]
-                out["doc_id"].append(doc_id)
-                out["ok"].append(True)
-                out["n_samples"].append(int(s.shape[0]))
-                out["sample_rate"].append(int(sr))
-                out["l_sum"].append(int(left.sum(dtype=np.int64)))
-                out["l_min"].append(int(left.min()))
-                out["l_max"].append(int(left.max()))
-                out["r_sum"].append(int(right.sum(dtype=np.int64)))
-                out["r_min"].append(int(right.min()))
-                out["r_max"].append(int(right.max()))
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(
-        feats,
-        schema=(
-            "doc_id long, ok boolean, n_samples long, sample_rate long, "
-            "l_sum long, l_min long, l_max long, "
-            "r_sum long, r_min long, r_max long"
-        ),
-    )
-
-
-def flac_decode_features(df: DataFrame, payload_col: str = "flac",
-                         id_col: str = "doc_id") -> DataFrame:
-    """REAL compressed-audio decode over Arrow batches: full FLAC
-    parse (STREAMINFO, frame headers, FIXED/Rice subframes) with CRC-8,
-    CRC-16 and md5 all verified, reduced to integer-exact sample
-    statistics.  Corrupt payloads flag their row (ok=false)."""
-    from .flac import decode_flac
-
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
-
-    def feats(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        cols = ("n_samples", "sample_rate", "sample_sum", "s_min", "s_max")
-        for pdf in batches:
-            out = {"doc_id": [], "ok": [], **{c: [] for c in cols}}
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                try:
-                    s, sr = decode_flac(bytes(p), verify=True)
-                except (ValueError, NotImplementedError):
-                    out["doc_id"].append(doc_id)
-                    out["ok"].append(False)
-                    for c in cols:
-                        out[c].append(None)
-                    continue
-                out["doc_id"].append(doc_id)
-                out["ok"].append(True)
-                out["n_samples"].append(int(s.shape[0]))
-                out["sample_rate"].append(int(sr))
-                out["sample_sum"].append(int(s.sum(dtype=np.int64)))
-                out["s_min"].append(int(s.min()))
-                out["s_max"].append(int(s.max()))
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(
-        feats,
-        schema=(
-            "doc_id long, ok boolean, n_samples long, sample_rate long, "
-            "sample_sum long, s_min long, s_max long"
         ),
     )
 
@@ -4990,301 +4567,6 @@ def epub_text_features(df: DataFrame, payload_col: str = "epub",
         feats,
         schema=("doc_id long, ok boolean, title string, n_chapters long, "
                 "n_chars long, text_md5 string"),
-    )
-
-
-def synth_mp4_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach an ``mp4`` column of ISO-BMFF containers: brand cycles
-    id %% 3 over {isom, mp42, avc1}, duration = (n_words %% 300 + 1)
-    * 40 ms, one avc1 video track with n_words samples at
-    ((id%%16)*16+64) x ((id%%9)*16+64), an mp4a/44100 audio track when
-    id is odd, the document text as the opaque mdat payload, layout
-    alternating fast-start vs mdat-first, and mvhd version cycling
-    0/1 by (id // 2) %% 2 — all closed-form for the oracle."""
-    from .mp4 import build_mp4
-
-    src = df.select(
-        F.col(id_col).cast("long").alias("doc_id"), F.col("text")
-    )
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for d, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(d)
-                text = str(text)
-                nw = len(text.split(" "))
-                payloads.append(build_mp4(
-                    brand=("isom", "mp42", "avc1")[d % 3],
-                    duration_ms=(nw % 300 + 1) * 40,
-                    n_video_samples=nw,
-                    width=(d % 16) * 16 + 64,
-                    height=(d % 9) * 16 + 64,
-                    audio=d % 2 == 1,
-                    mdat=text.encode("utf-8"),
-                    fast_start=d % 2 == 0,
-                    mvhd_version=(d // 2) % 2,
-                ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "mp4": payloads})
-
-    return src.mapInPandas(gen, schema="doc_id long, mp4 binary")
-
-
-def mp4_structure_features(df: DataFrame, payload_col: str = "mp4",
-                           id_col: str = "doc_id") -> DataFrame:
-    """REAL ISO-BMFF box walk over Arrow batches — bounded recursive
-    box grammar, largesize escape, both fast-start and mdat-first
-    layouts, mvhd v0/v1 — emitting the container metadata a corpus
-    triage pass needs (duration, track layout, codec fourcc, dims,
-    sample count) plus the mdat md5.  Corrupt files flag the row."""
-    import hashlib
-
-    from .mp4 import parse_mp4
-
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
-
-    def feats(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        cols = ("brand", "duration_ms", "n_tracks", "has_audio",
-                "video_codec", "width", "height", "n_video_samples",
-                "audio_rate", "mdat_md5")
-        for pdf in batches:
-            out = {"doc_id": [], "ok": [], **{c: [] for c in cols}}
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                try:
-                    m = parse_mp4(bytes(p))
-                except Exception:
-                    out["doc_id"].append(doc_id)
-                    out["ok"].append(False)
-                    for c in cols:
-                        out[c].append(None)
-                    continue
-                vid = next((t for t in m["tracks"]
-                            if t["handler"] == "vide"), None)
-                aud = next((t for t in m["tracks"]
-                            if t["handler"] == "soun"), None)
-                out["doc_id"].append(doc_id)
-                out["ok"].append(True)
-                out["brand"].append(m["brand"])
-                out["duration_ms"].append(m["duration_ms"])
-                out["n_tracks"].append(len(m["tracks"]))
-                out["has_audio"].append(aud is not None)
-                out["video_codec"].append(
-                    vid["stsd"][0]["fourcc"] if vid and vid["stsd"]
-                    else None)
-                out["width"].append(
-                    int(vid["width"]) if vid else None)
-                out["height"].append(
-                    int(vid["height"]) if vid else None)
-                out["n_video_samples"].append(
-                    vid["n_samples"] if vid else None)
-                out["audio_rate"].append(
-                    aud["stsd"][0].get("samplerate")
-                    if aud and aud["stsd"] else None)
-                out["mdat_md5"].append(
-                    hashlib.md5(m["mdat"]).hexdigest())
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(
-        feats,
-        schema=("doc_id long, ok boolean, brand string, duration_ms long, "
-                "n_tracks long, has_audio boolean, video_codec string, "
-                "width long, height long, n_video_samples long, "
-                "audio_rate long, mdat_md5 string"),
-    )
-
-
-def synth_mkv_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach an ``mkv`` column of EBML/Matroska containers: doctype
-    alternates matroska/webm, video codec cycles id %% 3 over
-    {V_VP9, V_AV1, V_MPEG4/ISO/AVC}, an A_OPUS audio track when id is
-    odd, duration (n_words %% 500 + 1) * 20 ms, dims the same modular
-    grid as the MP4 synth, and the document text carried as opaque
-    SimpleBlock payloads (32-byte blocks, 4 per Cluster) — all
-    closed-form for the oracle."""
-    from .ebml import build_mkv
-
-    src = df.select(
-        F.col(id_col).cast("long").alias("doc_id"), F.col("text")
-    )
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for d, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(d)
-                text = str(text)
-                nw = len(text.split(" "))
-                payloads.append(build_mkv(
-                    doctype=("matroska", "webm")[d % 2],
-                    duration_ms=(nw % 500 + 1) * 20,
-                    title=f"Video {d}",
-                    video_codec=("V_VP9", "V_AV1",
-                                 "V_MPEG4/ISO/AVC")[d % 3],
-                    width=(d % 16) * 16 + 64,
-                    height=(d % 9) * 16 + 64,
-                    audio=d % 2 == 1,
-                    payload=text.encode("utf-8"),
-                ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "mkv": payloads})
-
-    return src.mapInPandas(gen, schema="doc_id long, mkv binary")
-
-
-def mkv_structure_features(df: DataFrame, payload_col: str = "mkv",
-                           id_col: str = "doc_id") -> DataFrame:
-    """REAL EBML walk over Arrow batches — RFC 8794 VINT decode,
-    bounded master-element recursion, unknown-size Segment escape,
-    SimpleBlock framing — emitting container triage metadata plus the
-    md5 of the reassembled (codec-opaque) block payload.  Corrupt
-    files flag the row."""
-    import hashlib
-
-    from .ebml import parse_mkv
-
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
-
-    def feats(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        cols = ("doctype", "duration_ms", "n_tracks", "has_audio",
-                "video_codec", "width", "height", "n_clusters",
-                "n_blocks", "payload_md5")
-        for pdf in batches:
-            out = {"doc_id": [], "ok": [], **{c: [] for c in cols}}
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                try:
-                    m = parse_mkv(bytes(p))
-                except Exception:
-                    out["doc_id"].append(doc_id)
-                    out["ok"].append(False)
-                    for c in cols:
-                        out[c].append(None)
-                    continue
-                vid = next((t for t in m["tracks"]
-                            if t.get("type") == 1), None)
-                aud = next((t for t in m["tracks"]
-                            if t.get("type") == 2), None)
-                out["doc_id"].append(doc_id)
-                out["ok"].append(True)
-                out["doctype"].append(m["doctype"])
-                out["duration_ms"].append(m["duration_ms"])
-                out["n_tracks"].append(len(m["tracks"]))
-                out["has_audio"].append(aud is not None)
-                out["video_codec"].append(
-                    vid["codec"] if vid else None)
-                out["width"].append(vid.get("width") if vid else None)
-                out["height"].append(vid.get("height") if vid else None)
-                out["n_clusters"].append(m["n_clusters"])
-                out["n_blocks"].append(m["n_blocks"])
-                out["payload_md5"].append(
-                    hashlib.md5(m["payload"]).hexdigest())
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(
-        feats,
-        schema=("doc_id long, ok boolean, doctype string, "
-                "duration_ms long, n_tracks long, has_audio boolean, "
-                "video_codec string, width long, height long, "
-                "n_clusters long, n_blocks long, payload_md5 string"),
-    )
-
-
-def synth_ogg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach an ``ogg`` column: codec alternates Vorbis/Opus by id
-    parity (channels 1/2, rate 44100/48000), a VorbisComment block of
-    TITLE = first three words, ARTIST = doc{id}, plus id %% 4 extra
-    COMMENT{i} = word[i] tags, and the document text as opaque
-    64-byte audio packets laced 4 per page — all closed-form."""
-    from .ogg import build_ogg
-
-    src = df.select(
-        F.col(id_col).cast("long").alias("doc_id"), F.col("text")
-    )
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for d, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(d)
-                text = str(text)
-                words = text.split(" ")
-                comments = (
-                    ["TITLE=" + " ".join(words[:3]),
-                     f"ARTIST=doc{d}"]
-                    + [f"COMMENT{i}={words[i]}" for i in range(d % 4)]
-                )
-                payloads.append(build_ogg(
-                    codec=("vorbis", "opus")[d % 2],
-                    serial=d,
-                    channels=d % 2 + 1,
-                    rate=(44100, 48000)[d % 2],
-                    vendor="health-monitor-synth",
-                    comments=comments,
-                    audio=text.encode("utf-8"),
-                ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "ogg": payloads})
-
-    return src.mapInPandas(gen, schema="doc_id long, ogg binary")
-
-
-def ogg_metadata_features(df: DataFrame, payload_col: str = "ogg",
-                          id_col: str = "doc_id") -> DataFrame:
-    """REAL Ogg walk over Arrow batches — page CRC verified with the
-    from-scratch non-reflected Ogg CRC-32, packets reassembled across
-    lacing, Vorbis/Opus identification + VorbisComment parse —
-    emitting the tag metadata and the reassembled opaque-audio md5.
-    Corrupt streams flag the row."""
-    import hashlib
-
-    from .ogg import parse_ogg
-
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
-
-    def feats(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        cols = ("codec", "channels", "rate", "n_pages", "n_packets",
-                "n_comments", "title", "audio_md5")
-        for pdf in batches:
-            out = {"doc_id": [], "ok": [], **{c: [] for c in cols}}
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                try:
-                    m = parse_ogg(bytes(p))
-                except Exception:
-                    out["doc_id"].append(doc_id)
-                    out["ok"].append(False)
-                    for c in cols:
-                        out[c].append(None)
-                    continue
-                title = next(
-                    (c[6:] for c in m["comments"]
-                     if c.upper().startswith("TITLE=")), None)
-                out["doc_id"].append(doc_id)
-                out["ok"].append(True)
-                out["codec"].append(m["codec"])
-                out["channels"].append(m["channels"])
-                out["rate"].append(m["rate"])
-                out["n_pages"].append(m["n_pages"])
-                out["n_packets"].append(m["n_packets"])
-                out["n_comments"].append(len(m["comments"]))
-                out["title"].append(title)
-                out["audio_md5"].append(
-                    hashlib.md5(m["audio"]).hexdigest())
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(
-        feats,
-        schema=("doc_id long, ok boolean, codec string, channels long, "
-                "rate long, n_pages long, n_packets long, "
-                "n_comments long, title string, audio_md5 string"),
     )
 
 
@@ -5750,190 +5032,6 @@ def avro_ocf_extract(df: DataFrame, payload_col: str = "avro",
         feats,
         schema=("doc_id long, ok boolean, codec string, n_blocks long, "
                 "rec_idx long, head string, n_words long"),
-    )
-
-
-def synth_au_payload(df: DataFrame, id_col: str = "doc_id",
-                     len_col: str = "n_chars") -> DataFrame:
-    """Attach an ``au`` column of Sun/NeXT audio files: encoding
-    cycles id %% 3 over {mu-law, signed PCM8, BE PCM16}, rate over
-    {8000, 16000, 44100}, channels = id %% 2 + 1, sample count
-    n_chars + 600 floored to a channel multiple, a 'doc<id>'
-    annotation displacing the data offset, and the unknown-size
-    (0xFFFFFFFF, read-to-EOF) header form every 4th doc — byte
-    streams closed-form for the oracle."""
-    import numpy as np
-
-    from .au import build_au
-
-    src = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(len_col).cast("long").alias("n_chars"),
-    )
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for d, nc in zip(pdf["doc_id"], pdf["n_chars"]):
-                d, nc = int(d), int(nc)
-                ch = d % 2 + 1
-                n0 = nc + 600
-                n = n0 - (n0 % ch)
-                enc = d % 3 + 1
-                i = np.arange(n, dtype=np.int64)
-                if enc == 1:
-                    data = ((13 * d + 7 * i) % 256).astype(
-                        np.uint8).tobytes()
-                elif enc == 2:
-                    data = (((11 * d + 5 * i) % 256) - 128).astype(
-                        np.int8).tobytes()
-                else:
-                    data = (((31 * d + 17 * i) % 4001) - 2000).astype(
-                        ">i2").tobytes()
-                payloads.append(build_au(
-                    encoding=enc,
-                    rate=(8000, 16000, 44100)[d % 3],
-                    channels=ch,
-                    data=data,
-                    annotation=f"doc{d}\x00".encode(),
-                    unknown_size=d % 4 == 0,
-                ))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "au": payloads})
-
-    return src.mapInPandas(gen, schema="doc_id long, au binary")
-
-
-def au_decode_features(df: DataFrame, payload_col: str = "au",
-                       id_col: str = "doc_id") -> DataFrame:
-    """REAL Sun AU decode over Arrow batches — header walk with the
-    annotation offset and unknown-size form, mu-law expansion through
-    the repo's CCITT-pinned G.711 tables, signed PCM8/BE-PCM16 —
-    emitting integer sample statistics.  Corrupt payloads flag."""
-    from .au import parse_au
-
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
-
-    def feats(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        cols = ("encoding", "sample_rate", "channels", "n_samples",
-                "s_sum", "s_min", "s_max")
-        for pdf in batches:
-            out = {"doc_id": [], "ok": [], **{c: [] for c in cols}}
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                try:
-                    m = parse_au(bytes(p))
-                except Exception:
-                    out["doc_id"].append(doc_id)
-                    out["ok"].append(False)
-                    for c in cols:
-                        out[c].append(None)
-                    continue
-                s = m["samples"]
-                out["doc_id"].append(doc_id)
-                out["ok"].append(True)
-                out["encoding"].append(m["encoding_name"])
-                out["sample_rate"].append(m["rate"])
-                out["channels"].append(m["channels"])
-                out["n_samples"].append(m["n_samples"])
-                out["s_sum"].append(int(s.sum()))
-                out["s_min"].append(int(s.min()))
-                out["s_max"].append(int(s.max()))
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(
-        feats,
-        schema=("doc_id long, ok boolean, encoding string, "
-                "sample_rate long, channels long, n_samples long, "
-                "s_sum long, s_min long, s_max long"),
-    )
-
-
-def synth_mp3_id3v1_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Attach an ``mp3`` column carrying BOTH tag layers: the ID3v2.3
-    head (TIT2 'T<id>', TPE1 'doc<id>') the triage query already
-    exercises, plus a 128-byte ID3v1.1 TRAILER with the same
-    title/artist, album 'Album <id%%7>', year 1970+id%%50, the first
-    word as comment, track id%%30+1 and genre cycling
-    {0,1,2,8,13,17} — every field closed-form."""
-    from .mp3 import build_id3v1, encode_mp3_stub
-
-    src = df.select(
-        F.col(id_col).cast("long").alias("doc_id"), F.col("text")
-    )
-    genres = (0, 1, 2, 8, 13, 17)
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for d, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(d)
-                w0 = str(text).split(" ")[0]
-                payloads.append(
-                    encode_mp3_stub(f"T{d}", f"doc{d}", d % 4 + 1)
-                    + build_id3v1(
-                        title=f"T{d}", artist=f"doc{d}",
-                        album=f"Album {d % 7}",
-                        year=str(1970 + d % 50),
-                        comment=w0, track=d % 30 + 1,
-                        genre=genres[d % 6]))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "mp3": payloads})
-
-    return src.mapInPandas(gen, schema="doc_id long, mp3 binary")
-
-
-def mp3_id3v1_features(df: DataFrame, payload_col: str = "mp3",
-                       id_col: str = "doc_id") -> DataFrame:
-    """Both ID3 layers parsed and CROSS-CHECKED: v1 trailer fields
-    (including the v1.1 track convention) against the v2 head's
-    TIT2/TPE1."""
-    from .mp3 import parse_id3v1, parse_id3v2
-
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
-
-    def feats(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        cols = ("title", "artist", "album", "year", "comment",
-                "track", "genre", "tags_agree")
-        for pdf in batches:
-            out = {"doc_id": [], "ok": [], **{c: [] for c in cols}}
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                try:
-                    p = bytes(p)
-                    v1 = parse_id3v1(p)
-                    v2, _ = parse_id3v2(p)
-                    if v1 is None:
-                        raise ValueError("missing ID3v1 trailer")
-                except Exception:
-                    out["doc_id"].append(doc_id)
-                    out["ok"].append(False)
-                    for c in cols:
-                        out[c].append(None)
-                    continue
-                out["doc_id"].append(doc_id)
-                out["ok"].append(True)
-                out["title"].append(v1["title"])
-                out["artist"].append(v1["artist"])
-                out["album"].append(v1["album"])
-                out["year"].append(v1["year"])
-                out["comment"].append(v1["comment"])
-                out["track"].append(v1["track"])
-                out["genre"].append(v1["genre"])
-                out["tags_agree"].append(
-                    v1["title"] == v2.get("TIT2")
-                    and v1["artist"] == v2.get("TPE1"))
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(
-        feats,
-        schema=("doc_id long, ok boolean, title string, artist string, "
-                "album string, year string, comment string, track long, "
-                "genre string, tags_agree boolean"),
     )
 
 

@@ -3,7 +3,7 @@
 At scale you don't recompute `COUNT(DISTINCT ...)` over raw data per
 query — you materialize mergeable sketches per partition/day/key and
 union them at read time.  Spark ships Apache DataSketches HLL natively
-(`hll_sketch_agg` / `hll_union_agg` / `hll_sketch_estimate`), which this
+(`hll_sketch_agg` / `hll_sketch_estimate`), which this
 module wraps together with the lighter `approx_count_distinct` (HLL++)
 and `approx_percentile` paths.
 
@@ -25,15 +25,6 @@ def distinct_sketches(
     return df.groupBy(*key_cols).agg(
         F.hll_sketch_agg(value_col, F.lit(lg_k)).alias("dv_sketch"),
         F.count(F.lit(1)).alias("n_rows"),
-    )
-
-
-def merge_distinct_sketches(sketches: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Union previously-materialized sketches to a coarser grouping —
-    the read-side merge (e.g. daily → monthly rollup)."""
-    return sketches.groupBy(*key_cols).agg(
-        F.hll_union_agg("dv_sketch").alias("dv_sketch"),
-        F.sum("n_rows").alias("n_rows"),
     )
 
 

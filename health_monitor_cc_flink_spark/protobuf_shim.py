@@ -1,5 +1,5 @@
 """Environment shim: pyspark's transformWithStateInPandas state protocol
-needs ``google.protobuf``, which isn't installed as a site-package here.
+needs ``google.protobuf``, which may not be installed as a site-package.
 The Google Cloud SDK (if present) ships a pure-Python protobuf runtime;
 expose it via PYTHONPATH so the JVM-spawned Python state-server workers
 inherit it too (must run BEFORE the SparkSession/JVM starts).  The
@@ -7,8 +7,10 @@ gencode/runtime version pin differs only in the '-dev' suffix, hence the
 documented TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK escape hatch.
 No-op when protobuf is already importable or the SDK path is absent.
 
-Single source for tests/conftest.py and scripts/scale_probe.py (they
-previously carried verbatim copies of this block).
+Callers: tests/conftest.py, __spark_entry__.py and
+scripts/ab_tumble_drain.py.  No package code runs
+transformWithStateInPandas today; the shim stays for the fused S4->S6
+``transformWithStateInPandas`` processor planned in ROADMAP #1.
 """
 
 from __future__ import annotations

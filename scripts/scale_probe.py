@@ -205,21 +205,17 @@ PROBE_QUERIES = (
     "mm_jpeg_decode_features",
     "mm_avi_mjpeg_frame_sample",
     "mm_jpeg_color_decode_features",
-    "mm_flac_decode_features",
     "agg_hll_mergeable_rollup",
     "agg_approx_battery",
     "agg_sketch_profile",
-    # round-8 additions: three more Arrow-batched CPU-map codecs —
-    # progressive JPEG, LPC/mid-side FLAC, WebP-lossless — all must
-    # track the scan like their round-6/7 siblings
+    # round-8 additions: more Arrow-batched CPU-map codecs —
+    # progressive JPEG, WebP-lossless, GIF — all must track the scan
+    # like their round-6/7 siblings
     "mm_jpeg_progressive_decode_features",
-    "mm_flac_lpc_ms_decode_features",
     "mm_webp_decode_features",
     "mm_gif_decode_features",
-    "mm_g711_decode_features",
-    # ingestion explodes (rows multiply, bytes bounded) + metadata walk
+    # ingestion explodes (rows multiply, bytes bounded) + WARC walk
     "mm_archive_members_extract",
-    "mm_mp3_metadata_triage",
     "mm_warc_html_extract",
     # round-9 additions: the ExactSubstr span-dedup family is the first
     # probe entry whose core is a token-position equi-join — the gram
@@ -241,7 +237,6 @@ PROBE_QUERIES = (
     "mm_ico_decode_features",
     "mm_jpeg_exif_metadata",
     "mm_warc_charset_extract",
-    "mm_aiff_pcm_decode_features",
     "text_url_canonicalize",
     "corpus_domain_quota_sample",
     "corpus_robots_screen",

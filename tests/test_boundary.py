@@ -4,9 +4,11 @@ engine facade) loads no operator-family or query-registry module, so those
 families can be cut without touching the pipeline, and of the streaming
 package it loads only the health monitor's streaming path."""
 
+import ast
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 PKG = "health_monitor_cc_flink_spark"
 
@@ -48,3 +50,46 @@ def test_paper_core_loads_only_the_streaming_path():
         if m.startswith(f"{PKG}.streaming.")
     }
     assert streaming <= set(STREAMING_PATH), sorted(streaming - set(STREAMING_PATH))
+
+
+def _imported_modules(path: Path, module: str) -> set[str]:
+    """Dotted names of every module ``path`` imports, at any depth;
+    ``from X import a`` yields both ``X`` and ``X.a``."""
+    found = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            found.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parent = module.split(".")[: -node.level]
+                base = ".".join(parent + ([base] if base else []))
+            found.add(base)
+            found.update(f"{base}.{a.name}" for a in node.names)
+    return found
+
+
+def test_every_operator_module_has_a_package_caller():
+    """Every ``operators/*.py`` module is imported by a package module,
+    a script or ``bench.py`` other than itself; the ``operators``
+    package's own re-export list does not count as a caller."""
+    root = Path(__file__).resolve().parent.parent
+    sources = [*(root / PKG).rglob("*.py"), *(root / "scripts").glob("*.py"),
+               root / "bench.py"]
+    imports: dict[str, set[str]] = {}
+    for path in sources:
+        # a package's __init__ keeps its ".__init__" suffix, so a
+        # level-1 relative import resolves to the package itself
+        module = ".".join(path.relative_to(root).with_suffix("").parts)
+        imports[module] = _imported_modules(path, module)
+    operators = sorted(
+        f"{PKG}.operators.{p.stem}"
+        for p in (root / PKG / "operators").glob("*.py")
+        if p.stem != "__init__"
+    )
+    orphans = [
+        op for op in operators
+        if not any(op in found for mod, found in imports.items()
+                   if mod not in (op, f"{PKG}.operators.__init__"))
+    ]
+    assert orphans == []

@@ -92,74 +92,3 @@ def test_iceberg_parquet_position_deletes_refuse():
         [[("data/a.parquet", 0)]])
     with pytest.raises(ValueError, match="rewrite"):
         iceberg_to_delta(files)
-
-
-def test_hudi_iceberg_directions():
-    """Hudi COW <-> Iceberg: censuses agree; MOR log files and
-    delete-carrying snapshots refuse loudly."""
-    from health_monitor_cc_flink_spark.operators.hudi import (
-        base_file_name,
-        build_commit,
-        reconstruct_table,
-    )
-    from health_monitor_cc_flink_spark.operators.hudi_log import (
-        log_file_name,
-        write_avro_data_block,
-    )
-    from health_monitor_cc_flink_spark.operators.iceberg import (
-        STATUS_ADDED,
-        build_snapshot_v2,
-    )
-    from health_monitor_cc_flink_spark.operators.interop import (
-        hudi_to_iceberg,
-        iceberg_to_hudi,
-    )
-
-    T1 = "20260817000001"
-    hudi = {f".hoodie/{T1}.commit": build_commit({
-        "lang=en": [{"fileId": "f1",
-                     "path": "lang=en/" + base_file_name("f1", T1),
-                     "numWrites": 10, "totalWriteBytes": 100}],
-        "lang=de": [{"fileId": "f2",
-                     "path": "lang=de/" + base_file_name("f2", T1),
-                     "numWrites": 5, "totalWriteBytes": 50}],
-    })}
-    ice = hudi_to_iceberg(hudi)
-    isnap = walk_snapshot_v2(ice)
-    by = {f["file_path"]: f for f in isnap["live"]}
-    assert by["lang=en/" + base_file_name("f1", T1)][
-        "record_count"] == 10
-    assert by["lang=en/" + base_file_name("f1", T1)][
-        "lang"] == "en"
-    # back to hudi: census survives
-    hudi2 = iceberg_to_hudi(ice)
-    snap2 = reconstruct_table(hudi2)
-    got = {g["path"]: g["num_writes"]
-           for g in snap2["live"].values()}
-    want = {g["path"]: g["num_writes"]
-            for g in reconstruct_table(hudi)["live"].values()}
-    assert got == want
-    # MOR with logs refuses
-    import json as _json
-    T2 = "20260817000002"
-    mor = dict(hudi)
-    schema = _json.dumps({"type": "record", "name": "r", "fields": [
-        {"name": "k", "type": "long"},
-        {"name": "ts", "type": "long"}]})
-    log_rel = "lang=en/" + log_file_name("f1", T1, 1)
-    mor[log_rel] = write_avro_data_block(
-        schema, [{"k": 1, "ts": 1}], T2)
-    mor[f".hoodie/{T2}.deltacommit"] = build_commit({
-        "lang=en": [{"fileId": "f1", "path": log_rel,
-                     "numWrites": 1}]})
-    with pytest.raises(ValueError, match="compact"):
-        hudi_to_iceberg(mor)
-    # delete-carrying iceberg snapshot refuses toward hudi
-    files = build_snapshot_v2(
-        [[{"status": STATUS_ADDED, "file_path": "data/a.parquet",
-           "file_format": "PARQUET", "record_count": 10,
-           "file_size_in_bytes": 1, "lang": "en"}]],
-        [],
-        deletion_vectors=[("data/a.parquet", [0])])
-    with pytest.raises(ValueError, match="resurrect"):
-        iceberg_to_hudi(files)

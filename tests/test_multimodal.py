@@ -634,32 +634,6 @@ def test_jpeg_color_decode_features_flags_and_native_chroma(spark):
     assert got[3].marker_ok is False  # truncated
 
 
-def test_flac_decode_features_flags_and_stats(spark):
-    """FLAC Arrow path: healthy payloads report exact stats; corrupt
-    (bit-flipped, md5/CRC-caught) and truncated payloads flag rows."""
-    import numpy as np
-
-    from health_monitor_cc_flink_spark.operators.flac import encode_flac
-    from health_monitor_cc_flink_spark.operators.multimodal import (
-        flac_decode_features,
-    )
-
-    s = (((np.arange(1200) * 7) % 2048) - 1024).astype(np.int16)
-    good = encode_flac(s, 16000)
-    flipped = bytearray(good)
-    flipped[-30] ^= 0xFF
-    df = spark.createDataFrame(
-        [(1, bytes(good)), (2, bytes(flipped)), (3, bytes(good[:25]))],
-        "doc_id long, flac binary",
-    )
-    got = {r.doc_id: r for r in flac_decode_features(df).collect()}
-    assert got[1].ok and got[1].n_samples == 1200
-    assert got[1].sample_rate == 16000
-    assert got[1].sample_sum == int(s.sum())
-    assert got[1].s_min == int(s.min()) and got[1].s_max == int(s.max())
-    assert got[2].ok is False and got[3].ok is False
-
-
 def test_avi_frames_only_under_movi_and_in_document_order():
     """ADVICE r7: '00dc' chunks planted outside a movi LIST are not
     video data; multiple movi/'rec ' LISTs (OpenDML) keep file order;

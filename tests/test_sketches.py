@@ -1,4 +1,4 @@
-"""Sketch accuracy + mergeability against exact answers."""
+"""Sketch accuracy against exact answers."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -7,7 +7,6 @@ from health_monitor_cc_flink_spark.operators.sketches import (
     approx_profile,
     distinct_sketches,
     estimate,
-    merge_distinct_sketches,
 )
 from health_monitor_cc_flink_spark.sources.testdata import load_table
 
@@ -26,18 +25,6 @@ def test_hll_sketch_estimates_within_error(spark, lineitem):
     assert rows
     for r in rows:
         assert abs(r.distinct_estimate - r.exact) / r.exact < 0.05
-
-
-def test_hll_sketches_merge_correctly(spark, lineitem):
-    """Fine sketches unioned to a coarser key must estimate the same as
-    sketching the coarse key directly — the rollup property."""
-    fine = distinct_sketches(lineitem, ["l_returnflag", "l_linestatus"], "l_orderkey")
-    rolled = estimate(merge_distinct_sketches(fine, ["l_returnflag"]))
-    direct = estimate(distinct_sketches(lineitem, ["l_returnflag"], "l_orderkey"))
-    merged = {r.l_returnflag: r.distinct_estimate for r in rolled.collect()}
-    straight = {r.l_returnflag: r.distinct_estimate for r in direct.collect()}
-    for k in straight:
-        assert abs(merged[k] - straight[k]) / straight[k] < 0.02
 
 
 def test_approx_profile(spark, lineitem):
